@@ -21,6 +21,11 @@ import graft.car._
   * `--n-epochs`, `--evaluate-every`, `--negative-sample`,
   * `--learning-rate`, `--reg-ratio`); torch-only knobs (cuda, dropout,
   * n-bases) have no Spark counterpart and are not accepted.
+  *
+  * Independent work inside a stage runs concurrently on one session
+  * (see [[graft.car.Lifecycles]]); so do the artifact writes of
+  * `preprocess` (five parquet tables and `dictionary.json`) and of
+  * `second` (two parquet tables). No flag controls this.
   */
 object Run {
 
@@ -79,12 +84,13 @@ object Run {
             embeddingPath = Some(s"$resultDir/embedding"),
             percentage = flag("percentage", "0.7").toDouble,
             triplePercentage = flag("triple-percentage", "0.7").toDouble)
-          out.train.write.mode("overwrite").parquet(s"$resultDir/train_dataset")
-          out.dev.write.mode("overwrite").parquet(s"$resultDir/dev_dataset")
-          out.triplets.write.mode("overwrite").parquet(s"$resultDir/triplets")
-          out.entityVocab.write.mode("overwrite").parquet(s"$resultDir/entity_vocab")
-          out.relationVocab.write.mode("overwrite").parquet(s"$resultDir/relation_vocab")
-          Vocab.saveJson(out.vocab, s"$resultDir/dictionary.json")
+          Concurrently.all(spark)(
+            () => out.train.write.mode("overwrite").parquet(s"$resultDir/train_dataset"),
+            () => out.dev.write.mode("overwrite").parquet(s"$resultDir/dev_dataset"),
+            () => out.triplets.write.mode("overwrite").parquet(s"$resultDir/triplets"),
+            () => out.entityVocab.write.mode("overwrite").parquet(s"$resultDir/entity_vocab"),
+            () => out.relationVocab.write.mode("overwrite").parquet(s"$resultDir/relation_vocab"),
+            () => Vocab.saveJson(out.vocab, s"$resultDir/dictionary.json"))
           println(s"[run] preprocess done: epochLoss=${out.epochLoss.mkString(",")}"
             + (if (out.bestEpoch >= 0)
                 s" bestEpoch=${out.bestEpoch} mrrTrace=${out.mrrTrace.mkString(",")}"
@@ -119,8 +125,9 @@ object Run {
           }
           val (dealScored, datePrice) =
             Lifecycles.second(spark, car, txn, pretrained = pretrained2)
-          dealScored.write.mode("overwrite").parquet(s"$resultDir/deal_scored")
-          datePrice.write.mode("overwrite").parquet(s"$resultDir/date_price")
+          Concurrently.all(spark)(
+            () => dealScored.write.mode("overwrite").parquet(s"$resultDir/deal_scored"),
+            () => datePrice.write.mode("overwrite").parquet(s"$resultDir/date_price"))
           println(s"[run] second done: outputs under $resultDir")
 
         case other =>

@@ -59,18 +59,6 @@ object CarFeatures {
   /** F4 — "YYYYMM" → date at day 01 (reference data.py:18,246). */
   def yyyymmToDate(c: Column): Column = to_date(c.cast("string"), "yyyyMM")
 
-  /** F5 — date difference in days (reference utils.py:226-231). */
-  def deltaDays(end: Column, start: Column): Column =
-    datediff(to_date(end), to_date(start))
-
-  /** F6 — "col:value" canonical vocabulary key (reference utils.py:167,173).
-    * Long-typed discrete values stringify integrally ("3", never "3.0") —
-    * the loader keeps discrete columns integral precisely so these keys
-    * match the reference's.
-    */
-  def vocabKey(colName: String): Column =
-    concat(lit(colName), lit(":"), col(colName).cast("string"))
-
   /** F7 — 0/1 label from a null test (reference utils.py:245). */
   def dealLabel(dealTime: Column): Column = dealTime.isNotNull.cast("int")
 }

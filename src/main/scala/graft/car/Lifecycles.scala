@@ -9,6 +9,17 @@ import graft.metrics.Scores
   * first.py / second.py`; here the same dataflow is three functions over
   * a SparkSession. Neural stages are MLlib models (capability parity,
   * not weight parity); intermediates are parquet, not xlsx.
+  *
+  * Branches of a lifecycle that share no state run concurrently on their
+  * own driver threads against the one SparkContext ([[Concurrently]]):
+  * in [[preprocess]] the dictionary beside the entity and relation
+  * vocabularies, and the two embedding saves; in [[second]] the deal
+  * classifier beside the date/price model, whose four heads are fitted
+  * side by side ([[Pipelines.dealDateAndPrice]]). Every branch reads the
+  * input it would read alone, so the results are those of sequential
+  * fits. No setting controls this. The cost is memory: during
+  * [[second]] the three LR heads' cached instances and the GBTs' binned
+  * points are cached at the same time instead of one after another.
   */
 object Lifecycles {
 
@@ -41,18 +52,17 @@ object Lifecycles {
     val raw = CarSources.readCarTest(spark, carPath)
     val repaired = Repair.repair(raw)
     val (train, dev) = Splits.shuffledSplit(repaired, percentage, seed)
-    val vocab = Vocab.build(Seq(train, dev), discreteCols)
     val triplets = Triplets.fromRows(train, discreteCols)
       .unionByName(Triplets.fromRows(dev, discreteCols, upperTriangleOnly = true))
       .dropDuplicates("head_entity", "relation", "tail_entity")
-    // Dense-id vocabularies over the triplet strings (utils.py:144-153),
-    // then the distributed analogue of the RGCN pretraining loop.
-    val entityVocab = graft.operators.DenseId.withOrderedId(
-      triplets.select(col("head_entity").as("entity"))
-        .union(triplets.select(col("tail_entity"))).distinct(),
-      "id", "entity")
-    val relationVocab = graft.operators.DenseId.withOrderedId(
-      triplets.select(col("relation")).distinct(), "id", "relation")
+    // The dictionary and the dense-id vocabularies over the triplet
+    // strings (utils.py:144-153) are independent, so they are built side
+    // by side; the distributed analogue of the RGCN pretraining loop
+    // follows.
+    val Seq(vocab, entityVocab, relationVocab) = Concurrently.all(spark)(
+      () => Vocab.build(Seq(train, dev), discreteCols),
+      () => entityVocabOf(triplets),
+      () => relationVocabOf(triplets))
     val encoded = Triplets.encode(triplets, entityVocab, relationVocab)
     // The reference splits the triplet table sequentially by
     // --triple-percentage (samples.py:96-111 `.loc[:train_len]`), trains
@@ -65,16 +75,29 @@ object Lifecycles {
       encTrain, entityVocab.count(), relationVocab.count(),
       embeddingCfg.copy(seed = seed), valid = Some(encValid))
     embeddingPath.foreach { p =>
-      EmbeddingStore.save(trained.entityEmb, s"$p/entity")
-      EmbeddingStore.save(
-        trained.relationEmb.withColumnRenamed("relation_id", "entity_id"),
-        s"$p/relation")
+      Concurrently.all(spark)(
+        () => EmbeddingStore.save(trained.entityEmb, s"$p/entity"),
+        () => EmbeddingStore.save(
+          trained.relationEmb.withColumnRenamed("relation_id", "entity_id"),
+          s"$p/relation"))
     }
     PreprocessOut(repaired, train, dev, vocab, triplets,
       entityVocab, relationVocab, encoded,
       trained.entityEmb, trained.relationEmb, trained.epochLoss,
       trained.mrrTrace, trained.bestEpoch)
   }
+
+  /** Dense ids over the head and tail entity strings of `triplets`. */
+  private[car] def entityVocabOf(triplets: DataFrame): DataFrame =
+    graft.operators.DenseId.withOrderedId(
+      triplets.select(col("head_entity").as("entity"))
+        .union(triplets.select(col("tail_entity"))).distinct(),
+      "id", "entity")
+
+  /** Dense ids over the relation strings of `triplets`. */
+  private[car] def relationVocabOf(triplets: DataFrame): DataFrame =
+    graft.operators.DenseId.withOrderedId(
+      triplets.select(col("relation")).distinct(), "id", "relation")
 
   /** Pretrained entity features from a preprocess run — the engine's
     * analogue of first.py:49-53 loading embedding.npz into the model's
@@ -168,14 +191,13 @@ object Lifecycles {
         "must reference the supplied car table (the reference's 附件4 keys " +
         "into 附件1, which its repo does not ship; see LifecyclesSpec for " +
         "the facsimile pattern)")
-    val clf = Pipelines.dealClassifier(labeled)
-    val dealScored = clf.transform(labeled)
-      .select(col("carid"), col("dealResult"), col("prediction").as("deal_pred"))
-
     val sold = CarFeatures.withDateComponents(
       featurize(CarFeatures.withFinalPrice(CarJoins.soldCars(carDf, txnDf))),
       "withdrawDate", "deal")
-    val (ym, mm, dm, pm) = Pipelines.dealDateAndPrice(sold)
+    val (clf, (ym, mm, dm, pm)) = Concurrently.both(spark)(
+      Pipelines.dealClassifier(labeled), Pipelines.dealDateAndPrice(sold))
+    val dealScored = clf.transform(labeled)
+      .select(col("carid"), col("dealResult"), col("prediction").as("deal_pred"))
     val datePrice = pm.transform(dm.transform(mm.transform(ym.transform(sold))))
       .select(col("carid"),
         col("dealYearPred"), col("dealMonthPred"), col("dealDayPred"),

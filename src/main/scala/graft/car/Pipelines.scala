@@ -61,27 +61,38 @@ object Pipelines {
 
   /** 问题二(b) — multi-task deal-date (year/month/day heads) + deal-price
     * (reference tabnet.py:218-275): one shared feature vector, three
-    * multinomial LogisticRegression heads + one regressor. Returns
-    * (yearModel, monthModel, dayModel, priceModel).
+    * multinomial LogisticRegression heads + one regressor. The four heads
+    * share nothing but the input, so they are fitted concurrently
+    * ([[Concurrently]]). Returns (yearModel, monthModel, dayModel,
+    * priceModel).
     */
   def dealDateAndPrice(train: DataFrame,
       yearCol: String = "dealYearIdx", monthCol: String = "dealMonthIdx",
       dayCol: String = "dealDayIdx", priceCol: String = "dealPrice")
       : (PipelineModel, PipelineModel, PipelineModel, PipelineModel) = {
+    val heads = dealDateAndPriceHeads(train, yearCol, monthCol, dayCol, priceCol)
+    val Seq(year, month, day, price) =
+      Concurrently.all(train.sparkSession)(heads.map(h => () => h.fit(train)): _*)
+    (year, month, day, price)
+  }
+
+  /** The unfitted year, month, day and price heads of [[dealDateAndPrice]]. */
+  private[car] def dealDateAndPriceHeads(train: DataFrame, yearCol: String,
+      monthCol: String, dayCol: String, priceCol: String): Seq[Pipeline] = {
     val feats = featureColumns(train)
     // distinct feature output columns so the four models' transforms chain
-    def head(labelCol: String, predCol: String): PipelineModel =
+    def head(labelCol: String, predCol: String): Pipeline =
       new Pipeline().setStages(Array(assembler(feats, s"${predCol}Features"),
         new LogisticRegression().setLabelCol(labelCol).setMaxIter(30)
           .setFeaturesCol(s"${predCol}Features")
           .setPredictionCol(predCol)
           .setProbabilityCol(s"${predCol}Prob")
-          .setRawPredictionCol(s"${predCol}Raw"))).fit(train)
+          .setRawPredictionCol(s"${predCol}Raw")))
     val price = new Pipeline().setStages(Array(assembler(feats, "dealPriceFeatures"),
       new GBTRegressor().setLabelCol(priceCol).setMaxIter(20)
         .setFeaturesCol("dealPriceFeatures")
-        .setPredictionCol("dealPricePred"))).fit(train)
-    (head(yearCol, "dealYearPred"), head(monthCol, "dealMonthPred"),
+        .setPredictionCol("dealPricePred")))
+    Seq(head(yearCol, "dealYearPred"), head(monthCol, "dealMonthPred"),
       head(dayCol, "dealDayPred"), price)
   }
 }

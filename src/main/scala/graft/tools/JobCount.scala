@@ -40,7 +40,8 @@ object JobCount {
       val fn = graft.SparkEntry.queries(name)
       // one untimed warm pass so codegen/JIT bring-up doesn't pollute
       // the job count comparison (job counts are identical cold/warm)
-      try fn(spark, dir).count() catch { case _: Throwable => () }
+      try fn(spark, dir).count()
+      catch { case e: Throwable => println(s"[jobs] $name warm pass failed: $e") }
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.gc()
       // listener events drain asynchronously — settle before zeroing

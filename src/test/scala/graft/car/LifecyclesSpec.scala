@@ -58,6 +58,20 @@ class LifecyclesSpec extends SparkSpec {
       s"trained MRR $trained not above random baseline $baseline")
   }
 
+  test("preprocess's concurrent vocabularies equal one-at-a-time builds") {
+    // a 附件2-style file: the fixture's 附件1 lines without the price field
+    val lines = (1 to 60).map(i => CarFixtures.trainLine(i.toLong, 5.0 + i * 0.25,
+      withNulls = i % 5 == 0).split("\t", -1).init.mkString("\t"))
+    val out = Lifecycles.preprocess(spark, CarFixtures.writeTsv(lines),
+      embeddingCfg = EmbeddingTrainer.Config(dim = 4, epochs = 1))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().toSeq
+    val cols = Seq("brand", "serial", "model", "color", "cityId", "country", "oiltype")
+    assert(rows(out.vocab) == rows(Vocab.build(Seq(out.train, out.dev), cols)))
+    assert(rows(out.entityVocab) == rows(Lifecycles.entityVocabOf(out.triplets)))
+    assert(rows(out.relationVocab) == rows(Lifecycles.relationVocabOf(out.triplets)))
+    assert(out.entityVocab.count() > 0 && out.relationVocab.count() > 0)
+  }
+
   test("first lifecycle: train on 70% of 附件2, score the rest, emit submission") {
     assume(exists(testPath))
     import spark.implicits._

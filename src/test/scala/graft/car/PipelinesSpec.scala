@@ -1,5 +1,9 @@
 package graft.car
 
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.classification.{GBTClassificationModel, LogisticRegressionModel}
+import org.apache.spark.ml.regression.GBTRegressionModel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.metrics.Scores
@@ -37,26 +41,64 @@ class PipelinesSpec extends SparkSpec {
     assert(back.count() == 40)
   }
 
-  test("deal classifier + multi-head date model train and predict") {
+  /** The deal-classifier input and the sold-car input of the 问题二 models:
+    * the fixture's matched rows, replicated to a trainable size.
+    */
+  private def dealFrames(): (DataFrame, DataFrame) = {
     val car = Repair.repair(CarFixtures.trainDf(spark, 40))
     val txn = CarFixtures.txnDf(spark)
     val joined = CarJoins.carWithTransactions(car, txn)
-    // too few matched rows for a real fit — replicate to a trainable size
     val train0 = joined.withColumn("rep", explode(array((0 until 10).map(lit): _*))).drop("rep")
     val train1 = CarFeatures.withDimensionFeatures(train0)
     val train = CarFeatures.withDateComponents(train1, "tradeTime", "trade")
+    val sold0 = CarFeatures.withFinalPrice(CarJoins.soldCars(car, txn))
+      .withColumn("rep", explode(array((0 until 10).map(lit): _*))).drop("rep")
+    val sold = CarFeatures.withDateComponents(
+      CarFeatures.withDimensionFeatures(sold0), "withdrawDate", "deal")
+    (train, sold)
+  }
+
+  test("deal classifier + multi-head date model train and predict") {
+    val (train, sold1) = dealFrames()
     val clf = Pipelines.dealClassifier(train)
     val scored = clf.transform(train)
     assert(scored.columns.contains("prediction"))
     assert(scored.select("prediction").distinct().count() <= 2)
 
-    val sold0 = CarFeatures.withFinalPrice(CarJoins.soldCars(car, txn))
-      .withColumn("rep", explode(array((0 until 10).map(lit): _*))).drop("rep")
-    val sold1 = CarFeatures.withDateComponents(
-      CarFeatures.withDimensionFeatures(sold0), "withdrawDate", "deal")
     val (ym, mm, dm, pm) = Pipelines.dealDateAndPrice(sold1)
     val p = pm.transform(dm.transform(mm.transform(ym.transform(sold1))))
     assert(Seq("dealYearPred", "dealMonthPred", "dealDayPred", "dealPricePred")
       .forall(p.columns.contains))
+  }
+
+  test("concurrent fits equal the same estimators fitted one at a time") {
+    val (train, sold) = dealFrames()
+    // as Lifecycles.second fits them: the classifier beside the four
+    // heads, which dealDateAndPrice fits side by side
+    val (clf, (ym, mm, dm, pm)) = Concurrently.both(spark)(
+      Pipelines.dealClassifier(train), Pipelines.dealDateAndPrice(sold))
+    val clf1 = Pipelines.dealClassifier(train)
+    val Seq(ym1, mm1, dm1, pm1) = Pipelines.dealDateAndPriceHeads(sold,
+      "dealYearIdx", "dealMonthIdx", "dealDayIdx", "dealPrice").map(_.fit(sold))
+
+    def predictions(m: PipelineModel, df: DataFrame, c: String): Seq[Double] =
+      m.transform(df).select(c).collect().map(_.getDouble(0)).toSeq
+    // the tree splits; the first line names the model's random uid
+    def splits(debug: String) = debug.linesIterator.drop(1).toSeq
+    def lr(m: PipelineModel) = m.stages.last.asInstanceOf[LogisticRegressionModel]
+    for ((a, b) <- Seq(ym -> ym1, mm -> mm1, dm -> dm1)) {
+      assert(lr(a).coefficientMatrix.toArray.toSeq == lr(b).coefficientMatrix.toArray.toSeq)
+      assert(lr(a).interceptVector.toArray.toSeq == lr(b).interceptVector.toArray.toSeq)
+    }
+    val (g, g1) = (pm.stages.last.asInstanceOf[GBTRegressionModel],
+      pm1.stages.last.asInstanceOf[GBTRegressionModel])
+    assert(g.treeWeights.toSeq == g1.treeWeights.toSeq)
+    assert(splits(g.toDebugString) == splits(g1.toDebugString))
+    assert(predictions(pm, sold, "dealPricePred") == predictions(pm1, sold, "dealPricePred"))
+    val (c, c1) = (clf.stages.last.asInstanceOf[GBTClassificationModel],
+      clf1.stages.last.asInstanceOf[GBTClassificationModel])
+    assert(c.treeWeights.toSeq == c1.treeWeights.toSeq)
+    assert(splits(c.toDebugString) == splits(c1.toDebugString))
+    assert(predictions(clf, train, "prediction") == predictions(clf1, train, "prediction"))
   }
 }
