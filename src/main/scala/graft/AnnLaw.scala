@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement main for the clustered-ANN scale law (SCALE.md r19):
@@ -22,12 +21,8 @@ object AnnLaw {
     val nprobe = args(2).toInt
     val k = if (args.length > 3) args(3).toInt else 10
     val nQ = if (args.length > 4) args(4).toInt else 100
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.SimilaritySearch
     val corpus = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,44 +1,54 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Untimed SESSION warm-up before any timed query: exercise the
+    * parquet scan, shuffle/aggregate, and window codegen paths once so
+    * JVM/codegen bring-up lands nowhere — previously the alphabetically
+    * first heavy query absorbed it all (a10_mrr: 3.9 s in-suite vs
+    * 0.3 s solo-warm), mis-attributing ~3 s of fixed session cost to
+    * one query's number. Also builds the stored fixtures that the
+    * `selected` queries read. Bench and `tools.Probe` both start here.
+    */
+  private[graft] def warmSession(spark: SparkSession, sfDir: String,
+      selected: collection.Set[String]): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    val w = spark.read.parquet(s"$sfDir/region.parquet")
+    w.groupBy(col("r_regionkey")).agg(count(lit(1)).as("n"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("r_regionkey")).orderBy(col("n"))))
+      .count()
+    // Spark 4's collation-aware case mapping initializes ICU titlecase
+    // tables + dictionary break iterators in a ~1.5 s static init the
+    // FIRST time any task lowercases text through CollationSupport —
+    // measured landing entirely inside whichever text query runs it
+    // first (r18: pipeline_docs, 2.8 s in-suite vs 0.46 s solo-warm).
+    // It is a per-JVM bring-up cost — on a real cluster it amortizes
+    // over an executor's lifetime — so trigger it here, untimed.
+    try Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
+    catch { case _: ClassNotFoundException => () }
+    // stored-artifact fixtures (the k-NN graph) build here, untimed:
+    // at scale they are offline-persisted indexes, and timing the
+    // one-off build inside whichever consumer runs first would
+    // mis-attribute ~3.4 s of nnDescent to a SEARCH row
+    if (selected.exists(graft.queries.VectorQueries.fixtureConsumers))
+      graft.queries.VectorQueries.ensureFixtures(spark, sfDir)
+    if (selected.contains("graph_walk_skipgrams") ||
+        selected.exists(graft.queries.GraphQueries.supplyFixtureConsumers))
+      graft.queries.GraphQueries.ensureFixtures(spark, sfDir)
+    if (selected.exists(graft.queries.WarehouseQueries.basketFixtureConsumers))
+      graft.queries.WarehouseQueries.ensureFixtures(spark, sfDir)
+    if (selected.exists(graft.queries.TextQueries.clusterFixtureConsumers))
+      graft.queries.TextQueries.ensureFixtures(spark, sfDir)
+    if (selected.exists(graft.queries.PretrainQueries.chunkFixtureConsumers))
+      graft.queries.PretrainQueries.ensureFixtures(spark, sfDir)
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default = core count (the contract since r1); the env override
-      // exists ONLY for the SCALE.md experiments that separate
-      // task-thread contention from partition-count overhead — the
-      // driver never sets it, so committed numbers always use the default
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Janino compile cache (STATIC conf, keyed by generated source).
-      // The default 100 entries is smaller than ONE complex query's
-      // fragment count (sql_components compiles 133 codegen units; its
-      // WARM re-run still recompiled 130 — measured, OPTIMIZATION_r19.md)
-      // so the cache thrashes and every query pays full Janino cost.
-      // Executor task threads serialize behind CodeGenerator.compile's
-      // KeyLock while this happens (sampled stacks). 10k entries ≈ tens
-      // of MB of class metadata, scale-independent (a long-lived
-      // executor JVM wants the same), parameterized for comparability.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // Generated WSCG classes embed the per-query codegen-stage ID in
-      // the class NAME by default (debuggability aid), so two stages
-      // with IDENTICAL generated bodies — e.g. the 5 shape-identical
-      // rounds of a lazily-stacked PageRank loop, or sibling queries
-      // sharing an operator pipeline — produce different source strings
-      // and MISS the compile cache the maxEntries bump made big enough.
-      // Naming them uniformly turns those misses into hits (measured
-      // r20: pagerank-family compiles 75→~20, subset −20%). Scale-
-      // neutral: a long-lived production executor wants the same
-      // (fewer Janino compiles + less metaspace), not a local[32] trick.
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID_IN_NAME", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional positional args = run only these queries (local profiling);
     // the driver invokes with no args and gets the full sorted suite
@@ -57,46 +67,7 @@ object Bench {
     // regression is attributable (in-suite vs solo-warm numbers for the
     // suite's slowest queries are recorded in SCALE.md)
     val warmup = sys.env.get("SPARK_GRAFT_WARMUP").contains("1")
-    // untimed SESSION warm-up before the loop: exercise the parquet
-    // scan, shuffle/aggregate, and window codegen paths once so JVM/
-    // codegen bring-up lands nowhere — previously the alphabetically
-    // first heavy query absorbed it all (a10_mrr: 3.9 s in-suite vs
-    // 0.3 s solo-warm), mis-attributing ~3 s of fixed session cost to
-    // one query's number
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val w = spark.read.parquet(s"$sfDir/region.parquet")
-      w.groupBy(col("r_regionkey")).agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("r_regionkey")).orderBy(col("n"))))
-        .count()
-      // Spark 4's collation-aware case mapping initializes ICU titlecase
-      // tables + dictionary break iterators in a ~1.5 s static init the
-      // FIRST time any task lowercases text through CollationSupport —
-      // measured landing entirely inside whichever text query runs it
-      // first (r18: pipeline_docs, 2.8 s in-suite vs 0.46 s solo-warm).
-      // It is a per-JVM bring-up cost — on a real cluster it amortizes
-      // over an executor's lifetime — so trigger it here, untimed.
-      try Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
-      catch { case _: ClassNotFoundException => () }
-      // stored-artifact fixtures (the k-NN graph) build here, untimed:
-      // at scale they are offline-persisted indexes, and timing the
-      // one-off build inside whichever consumer runs first would
-      // mis-attribute ~3.4 s of nnDescent to a SEARCH row
-      if (selected.keys.exists(graft.queries.VectorQueries.fixtureConsumers))
-        graft.queries.VectorQueries.ensureFixtures(spark, sfDir)
-      if (selected.contains("graph_walk_skipgrams") ||
-          selected.keys.exists(graft.queries.GraphQueries.supplyFixtureConsumers))
-        graft.queries.GraphQueries.ensureFixtures(spark, sfDir)
-      if (selected.keys.exists(graft.queries.WarehouseQueries.basketFixtureConsumers))
-        graft.queries.WarehouseQueries.ensureFixtures(spark, sfDir)
-      if (selected.keys.exists(graft.queries.TextQueries.clusterFixtureConsumers))
-        graft.queries.TextQueries.ensureFixtures(spark, sfDir)
-      if (selected.keys.exists(graft.queries.PretrainQueries.chunkFixtureConsumers))
-        graft.queries.PretrainQueries.ensureFixtures(spark, sfDir)
-      System.gc()
-    }
+    warmSession(spark, sfDir, selected.keySet)
     // deterministic (sorted) execution order for comparable timings
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       if (warmup) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print `explain("formatted")` for the named queries
   * (or all of them) against an sf dir — the review loop that keeps scan
   * pushdown (`PushedFilters`/`ReadSchema`), broadcast choices, and
@@ -16,12 +14,8 @@ object Explain {
     val names =
       if (args.length > 1) args(1).split(',').toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(
+        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.car._
 
 /** The user-facing entry-point binary — the analogue of running the
@@ -58,13 +57,9 @@ object Run {
       sys.error("--data <attachment-2-style TSV> is required"))
     val resultDir = flag("result-dir", "/tmp/graft_result")
 
-    val spark = SparkSession.builder()
-      .master(flag("master", s"local[${flag("cpus", "8")}]"))
-      .config("spark.sql.shuffle.partitions", flag("shuffle-partitions", "32"))
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
+    val spark = GraftSession.builder(
+        flag("master", s"local[${flag("cpus", "8")}]"),
+        flag("shuffle-partitions", "32").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -23,13 +23,6 @@ object TextOps {
       graft.functions.expressions.NfcNormalize(
         org.apache.spark.sql.graftshim.ColumnShim.expression(text)))
 
-  /** A BPE-ish regex tokenization: words, numbers, or single non-space
-    * symbols — the token-counting flavor an LLM-data pipeline uses when a
-    * real tokenizer is too expensive for a first pass.
-    */
-  def regexTokens(text: Column): Column =
-    filter(split(text, "(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"), t => t =!= "" && t =!= " ")
-
   /** Contiguous word n-gram shingles (joined with single spaces). For a
     * text shorter than n tokens the whole text is the single shingle —
     * same clipping the oracle's list-slice does.
@@ -40,12 +33,6 @@ object TextOps {
       sequence(lit(0), greatest(size(toks) - n, lit(0))),
       i => concat_ws(" ", slice(toks, i + 1, lit(n))))
   }
-
-  /** Character n-grams starting at every position (clipped at the tail). */
-  def charNGrams(text: Column, n: Int): Column =
-    transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => substring2(text, i, n))
 
   /** Number of vowels in the text. */
   def vowelCount(text: Column): Column =
@@ -142,21 +129,6 @@ object TextOps {
     regexp_count(text, lit(ipv4Pattern)).cast("long").as("n_ips"),
     regexp_count(text, lit(phonePattern)).cast("long").as("n_phones"))
 
-  /** substring with a Column start (the built-in only takes Int literals in
-    * its Scala signature; the SQL form accepts expressions).
-    */
-  private def substring2(text: Column, start: Column, len: Int): Column =
-    text.substr(start, lit(len))
-
-  /** MinHash signature of a shingle array: k independent hash slots via
-    * seed-prefixed xxhash64 — deterministic across runs and executors,
-    * unlike rand()-parameterized permutations.
-    */
-  def minHashSignature(shingles: Column, k: Int): Column =
-    array((0 until k).map { i =>
-      array_min(transform(shingles, sh => xxhash64(lit(i), sh)))
-    }: _*)
-
   /** 64-bit SimHash of a token array: per bit, sign of the sum of ±1
     * votes from each token's hash bit. One compiled pass per row
     * (graft.functions.expressions.SimHash64) — the functions-only
@@ -167,9 +139,6 @@ object TextOps {
     ColumnShim.column(
       graft.functions.expressions.SimHash64(ColumnShim.expression(toks)))
   }
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Jaro-Winkler similarity (one compiled pass per pair,
     * graft.functions.expressions.JaroWinkler) — textbook semantics,

@@ -65,10 +65,6 @@ object VectorOps {
     l2Normalize(slice(v, 1, d))
   }
 
-  /** Squared Euclidean distance via three dot products. */
-  def sqDist(a: Column, b: Column): Column =
-    dot(a, a) + dot(b, b) - lit(2.0) * dot(a, b)
-
   /** max(|xᵢ|) — per-vector dynamic range (codegen'd loop). */
   def maxAbs(v: Column): Column =
     ColumnShim.column(graft.functions.expressions.VecMaxAbs(

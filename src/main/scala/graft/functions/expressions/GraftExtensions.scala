@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point registering the engine's native
   * expressions as SQL functions, so `spark.sql("SELECT vec_dot(a, b)")`
-  * and `simhash64(tokens)` work next to the builtins:
+  * and `simhash64(tokens)` work next to the builtins. Every session
+  * built by [[graft.GraftSession.builder]] carries them; a session built
+  * elsewhere can load them through its config:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.functions.expressions.GraftExtensions")
+  * --conf spark.sql.extensions=graft.functions.expressions.GraftExtensions
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -139,14 +139,4 @@ object GraftExtensions {
       require(children.length == 2, "hilbert_key(xBigint, yBigint)")
       HilbertKey(children.head, children(1), bits = 16)
     })
-
-  /** Register on an already-built session (tests, notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq(vecDot, simHash64, minShingleMd5, vecScale, redactPii,
-      nfcNormalize, vecMaxAbs, jaroWinkler, signBits64, hilbertKey).foreach {
-      case (ident, info, builder) =>
-        registry.registerFunction(ident, info, builder)
-    }
-  }
 }

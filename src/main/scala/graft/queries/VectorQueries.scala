@@ -16,6 +16,65 @@ import graft.sources.Tables
   */
 object VectorQueries {
 
+  /** Write-once content-keyed parquet fixture under the JVM temp dir —
+    * the shared discipline behind every stored artifact here.
+    */
+  private[graft] def storedFixture(s: SparkSession, tag: String)(
+      build: => DataFrame): DataFrame = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_fixtures")
+    val path = new java.io.File(root, tag)
+    def complete = new java.io.File(path, "_SUCCESS").exists()
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    if (!complete) {
+      // build into a process-private temp sibling and rename into place:
+      // a concurrently-started driver (Bench + Verify racing) can then
+      // never observe — or clobber — a half-written fixture directory
+      // (ADVICE r19). POSIX rename onto an existing non-empty dir fails,
+      // which is exactly the loser-detects-winner semantics needed.
+      val tmp = new java.io.File(root,
+        s".$tag.tmp.${java.lang.ProcessHandle.current().pid()}")
+      val sc = s.sparkContext
+      val jobTag = s"graft-fixture-${java.util.UUID.randomUUID()}"
+      sc.addJobTag(jobTag)
+      try {
+        build.write.mode("overwrite").parquet(tmp.toString)
+        if (!tmp.renameTo(path) && !complete) {
+          // no winner: `path` is a stale directory a crashed builder
+          // left without `_SUCCESS` — drop it and install once more
+          rm(path)
+          if (!tmp.renameTo(path) && !complete)
+            throw new java.io.IOException(
+              s"could not install fixture $path and no complete copy exists")
+        }
+      } catch { case e: Throwable =>
+        // a failed write throws while its killed sibling tasks still
+        // run, and those recreate `tmp` after it is removed: wait them out
+        awaitTasks(sc, jobTag)
+        throw e
+      } finally {
+        sc.removeJobTag(jobTag)
+        rm(tmp) // the losing copy, or a failed build's leftovers
+      }
+    }
+    s.read.parquet(path.toString)
+  }
+
+  /** Blocks until every task of the jobs tagged `jobTag` has ended, for
+    * at most 60 s. The listener bus is drained first, so each task
+    * launched so far counts as active until its end event arrives.
+    */
+  private def awaitTasks(sc: org.apache.spark.SparkContext, jobTag: String): Unit = {
+    org.apache.spark.sql.graftshim.ListenerShim.waitUntilEmpty(sc)
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(jobTag).exists(j =>
+      st.getJobInfo(j).exists(_.stageIds.exists(id =>
+        st.getStageInfo(id).exists(_.numActiveTasks > 0))))
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (running && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+
   /** The NN-descent graph as a STORED artifact — built once per
     * (corpus, params) into a content-keyed parquet fixture under the
     * JVM temp dir, then READ by every consumer. At scale the k-NN
@@ -31,36 +90,6 @@ object VectorQueries {
     * [[Tables.contentStamp]] component busts it when the SOURCE data
     * is regenerated at the same path (different sf or seed).
     */
-  /** Write-once content-keyed parquet fixture under the JVM temp dir —
-    * the shared discipline behind every stored artifact here.
-    */
-  private[graft] def storedFixture(s: SparkSession, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_fixtures")
-    val path = new java.io.File(root, tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      // build into a process-private temp sibling and rename into place:
-      // a concurrently-started driver (Bench + Verify racing) can then
-      // never observe — or clobber — a half-written fixture directory
-      // (ADVICE r19). POSIX rename onto an existing non-empty dir fails,
-      // which is exactly the loser-detects-winner semantics needed.
-      val tmp = new java.io.File(root,
-        s".$tag.tmp.${java.lang.ProcessHandle.current().pid()}")
-      build.write.mode("overwrite").parquet(tmp.toString)
-      if (!tmp.renameTo(path)) {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          throw new java.io.IOException(
-            s"could not install fixture $path and no complete copy exists")
-        // a concurrent builder won the race — drop the losing copy
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(tmp)
-      }
-    }
-    s.read.parquet(path.toString)
-  }
-
   private[graft] def storedKnnGraph(s: SparkSession, dir: String): DataFrame =
     storedFixture(s,
       s"knn_graph_k10i3_v1_${Tables.contentStamp(dir, "embeddings")}") {

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (SparkSession.builder returns
-  * the same session across suites; per-suite sessions would thrash the
-  * JVM in a forked test run).
+/** One shared local session for all suites (getOrCreate returns the
+  * same session across suites; per-suite sessions would thrash the JVM
+  * in a forked test run). It is built by [[GraftSession]], so the tests
+  * run the settings and SQL functions that ship.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,14 +15,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    val s = GraftSession.builder("local[8]", 8)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed-table specs saveAsTable; keep the warehouse out of the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .getOrCreate()

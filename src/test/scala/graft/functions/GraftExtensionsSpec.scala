@@ -1,16 +1,14 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.functions.expressions.GraftExtensions
 import graft.sources.Tables
 
-/** The native expressions must be reachable from SQL once registered
-  * (SparkSessionExtensions / FunctionRegistry path).
+/** The native expressions must be reachable from SQL on every session
+  * built by [[graft.GraftSession]] (the SparkSessionExtensions path).
   */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("vec_dot and simhash64 are SQL-callable after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
       "simhash64(array('a', 'b')) AS h").head()
@@ -26,7 +24,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("jaro_winkler is SQL-callable and matches the Column form") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT jaro_winkler('MARTHA', 'MARHTA') AS j").head()
     assert(math.abs(r.getDouble(0) - 0.9611111111111111) < 1e-12)
@@ -38,7 +35,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("min_shingle_md5 equals the interpreted functions formulation") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     // includes supplementary characters (surrogate pairs in UTF-16):
     // shingle windows must count CODE POINTS like SQL substring does
@@ -62,7 +58,6 @@ class GraftExtensionsSpec extends SparkSpec {
   test("redact_pii SQL function ≡ TextOps.redactPii column form") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
-    GraftExtensions.register(spark)
     val df = Seq(
       "mail a.user@example.com from 10.0.0.1 call 555-123-4567",
       "no pii here").toDF("t")
@@ -74,7 +69,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("vec_max_abs ≡ interpreted HOF; int8 quantization bounds the element error") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     val e = Tables.embeddings(spark, sf("sf0.001")).limit(100)
     val rows = e.select(
@@ -96,7 +90,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("nfc_normalize recomposes, is idempotent, and matches the JDK reference") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val decomposed = "e\u0301cole franc\u0327aise" // e+composing acute, c+cedilla

@@ -75,7 +75,6 @@ class HilbertKeySpec extends SparkSpec {
   }
 
   test("the SQL-registered function runs under GraftExtensions") {
-    graft.functions.expressions.GraftExtensions.register(spark)
     val d = spark.sql("SELECT hilbert_key(CAST(3 AS BIGINT), CAST(4 AS BIGINT))")
       .head().getLong(0)
     val direct = Seq((3L, 4L)).toDF("x", "y")

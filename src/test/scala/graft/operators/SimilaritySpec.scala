@@ -406,8 +406,7 @@ class SimilaritySpec extends SparkSpec {
       sig(col("v")).as("a"),
       VectorOps.hyperplaneSignature(col("v"), planes).as("b")).collect()
     assert(both.forall(r => r.getLong(0) == r.getLong(1)))
-    // SQL registration (GraftExtensions)
-    graft.functions.expressions.GraftExtensions.register(spark)
+    // SQL form (GraftExtensions, injected by GraftSession)
     df.createOrReplaceTempView("sb_in")
     val viaSql = spark.sql("SELECT sign_bits64(v) AS s FROM sb_in WHERE id = 1").head()
     assert(viaSql.getLong(0) == ((1L << 0) | (1L << 3)))
