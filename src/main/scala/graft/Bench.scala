@@ -6,11 +6,12 @@ object Bench {
     * JVM/codegen bring-up lands nowhere — previously the alphabetically
     * first heavy query absorbed it all (a10_mrr: 3.9 s in-suite vs
     * 0.3 s solo-warm), mis-attributing ~3 s of fixed session cost to
-    * one query's number. Also builds the stored fixtures that the
-    * `selected` queries read. Bench and `tools.Probe` both start here.
+    * one query's number. Then installs every stored fixture and
+    * returns each one's build seconds. Bench and `tools.Probe` both
+    * start here.
     */
-  private[graft] def warmSession(spark: SparkSession, sfDir: String,
-      selected: collection.Set[String]): Unit = {
+  private[graft] def warmSession(spark: SparkSession,
+      sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
     val w = spark.read.parquet(s"$sfDir/region.parquet")
@@ -27,22 +28,13 @@ object Bench {
     // over an executor's lifetime — so trigger it here, untimed.
     try Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
     catch { case _: ClassNotFoundException => () }
-    // stored-artifact fixtures (the k-NN graph) build here, untimed:
-    // at scale they are offline-persisted indexes, and timing the
-    // one-off build inside whichever consumer runs first would
-    // mis-attribute ~3.4 s of nnDescent to a SEARCH row
-    if (selected.exists(graft.queries.VectorQueries.fixtureConsumers))
-      graft.queries.VectorQueries.ensureFixtures(spark, sfDir)
-    if (selected.contains("graph_walk_skipgrams") ||
-        selected.exists(graft.queries.GraphQueries.supplyFixtureConsumers))
-      graft.queries.GraphQueries.ensureFixtures(spark, sfDir)
-    if (selected.exists(graft.queries.WarehouseQueries.basketFixtureConsumers))
-      graft.queries.WarehouseQueries.ensureFixtures(spark, sfDir)
-    if (selected.exists(graft.queries.TextQueries.clusterFixtureConsumers))
-      graft.queries.TextQueries.ensureFixtures(spark, sfDir)
-    if (selected.exists(graft.queries.PretrainQueries.chunkFixtureConsumers))
-      graft.queries.PretrainQueries.ensureFixtures(spark, sfDir)
+    // stored fixtures build here, untimed: at scale they are
+    // offline-persisted indexes, and timing the one-off build inside
+    // whichever consumer runs first would mis-attribute it (~3.4 s of
+    // nnDescent to a SEARCH row)
+    val fixtures = graft.queries.Fixtures.ensureAll(spark, sfDir)
     System.gc()
+    fixtures
   }
 
   def main(args: Array[String]): Unit = {
@@ -67,7 +59,7 @@ object Bench {
     // regression is attributable (in-suite vs solo-warm numbers for the
     // suite's slowest queries are recorded in SCALE.md)
     val warmup = sys.env.get("SPARK_GRAFT_WARMUP").contains("1")
-    warmSession(spark, sfDir, selected.keySet)
+    warmSession(spark, sfDir)
     // deterministic (sorted) execution order for comparable timings
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       if (warmup) {

@@ -34,16 +34,12 @@ object GraphQueries {
     * discipline): at scale walk corpora are generated once and consumed
     * by many trainers, so the skip-gram query reads the fixture instead
     * of re-walking inside its timed body. Deterministic walks ⇒ any
-    * session's fixture is bit-identical; built untimed in Bench's
-    * warm-up via [[ensureFixtures]], or on first use elsewhere.
+    * session's fixture is bit-identical; built untimed by
+    * [[Fixtures.ensureAll]] in Bench's warm-up, or on first use elsewhere.
     */
-  private[graft] def storedWalks(s: SparkSession, dir: String): DataFrame = {
-    // content-stamped so a regenerated lineitem at the same path can
-    // never serve a stale walk fixture
-    val tag = s"n2v_walks_s3p1q4_v1_${Tables.contentStamp(dir, "lineitem")}"
-    val path = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixtures"), tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private[graft] def storedWalks(s: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(s,
+      s"n2v_walks_s3p1q4_v1_${Tables.contentStamp(dir, "lineitem")}") {
       val b = Tables.lineitem(s, dir).select(
         concat(lit("s"), col("l_suppkey")).as("a"),
         concat(lit("p"), col("l_partkey")).as("b"))
@@ -53,10 +49,7 @@ object GraphQueries {
         .select(concat(lit("s"), col("l_suppkey")).as("start")).distinct()
       graft.operators.GraphAlgs.node2vecWalks(sym, "src", "dst",
         starts, "start", steps = 3, p = 1L, q = 4L)
-        .write.mode("overwrite").parquet(path.toString)
     }
-    s.read.parquet(path.toString)
-  }
 
   /** The supplier→part supply graph as a STORED weighted edge table
     * (src, dst, w = shipment multiplicity) — the canonical-edges
@@ -69,19 +62,14 @@ object GraphQueries {
     * operators' internal `canonical()` would produce, so outputs are
     * bit-identical), the weighted PageRank consumes `w` directly.
     */
-  private[graft] def storedSupplyEdges(s: SparkSession, dir: String): DataFrame = {
-    val tag = s"supply_edges_v1_${Tables.contentStamp(dir, "lineitem")}"
-    val path = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixtures"), tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private[graft] def storedSupplyEdges(s: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(s,
+      s"supply_edges_v1_${Tables.contentStamp(dir, "lineitem")}") {
       Tables.lineitem(s, dir).groupBy(
           concat(lit("s"), col("l_suppkey")).as("src"),
           concat(lit("p"), col("l_partkey")).as("dst"))
         .agg(count(lit(1)).as("w"))
-        .write.mode("overwrite").parquet(path.toString)
     }
-    s.read.parquet(path.toString)
-  }
 
   /** The DEGREE-ANNOTATED supply edges — (src, dst, w, od, wout) with
     * od = out-degree and wout = Σw per src — plus the node set, as
@@ -92,36 +80,26 @@ object GraphQueries {
     * table is built once per graph snapshot and every ranking consumer
     * reads it. Ranks are bit-identical either way (integer dataflow).
     */
-  private[graft] def storedDegreeEdges(s: SparkSession, dir: String): DataFrame = {
-    val tag = s"supply_degree_edges_v1_${Tables.contentStamp(dir, "lineitem")}"
-    val path = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixtures"), tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private[graft] def storedDegreeEdges(s: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(s,
+      s"supply_degree_edges_v1_${Tables.contentStamp(dir, "lineitem")}") {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
       storedSupplyEdges(s, dir)
         .withColumn("od", count(lit(1)).over(w))
         .withColumn("wout", sum(col("w")).over(w))
-        .write.mode("overwrite").parquet(path.toString)
     }
-    s.read.parquet(path.toString)
-  }
 
   /** The supply graph's distinct node set as a stored artifact — the
     * |V|-row companion of [[storedDegreeEdges]] (deriving it from the
     * edges costs a 2|E| distinct per consumer otherwise).
     */
-  private[graft] def storedGraphNodes(s: SparkSession, dir: String): DataFrame = {
-    val tag = s"supply_nodes_v1_${Tables.contentStamp(dir, "lineitem")}"
-    val path = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixtures"), tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private[graft] def storedGraphNodes(s: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(s,
+      s"supply_nodes_v1_${Tables.contentStamp(dir, "lineitem")}") {
       val b = storedSupplyEdges(s, dir)
       b.select(col("src").as("node"))
         .unionAll(b.select(col("dst").as("node"))).distinct()
-        .write.mode("overwrite").parquet(path.toString)
     }
-    s.read.parquet(path.toString)
-  }
 
   /** The 5-round PageRank ranks as a stored artifact — what a
     * warehouse keeps between refreshes; `pagerank_warmstart` continues
@@ -129,35 +107,12 @@ object GraphQueries {
     * (integer dataflow), so the dumped `graph_pagerank` parquet doubles
     * as the oracle's copy of this fixture.
     */
-  private[graft] def storedPageRankRanks(s: SparkSession, dir: String): DataFrame = {
-    val tag = s"supply_pagerank5_v1_${Tables.contentStamp(dir, "lineitem")}"
-    val path = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixtures"), tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private[graft] def storedPageRankRanks(s: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(s,
+      s"supply_pagerank5_v1_${Tables.contentStamp(dir, "lineitem")}") {
       graft.operators.PageRank.ranksFromPrepared(
-          storedDegreeEdges(s, dir), storedGraphNodes(s, dir), iters = 5)
-        .write.mode("overwrite").parquet(path.toString)
+        storedDegreeEdges(s, dir), storedGraphNodes(s, dir), iters = 5)
     }
-    s.read.parquet(path.toString)
-  }
-
-  /** Queries that read the supply-edge fixture — Bench pre-builds it
-    * untimed when any of them is selected.
-    */
-  private[graft] val supplyFixtureConsumers: Set[String] = Set(
-    "graph_pagerank", "graph_pagerank_weighted", "graph_hits",
-    "graph_random_walks", "graph_node2vec_walks", "graph_betweenness",
-    "graph_ppr", "sql_pagerank", "pagerank_warmstart")
-
-  /** Pre-build stored fixtures OUTSIDE any timed body (Bench warm-up). */
-  def ensureFixtures(s: SparkSession, dir: String): Unit = {
-    storedSupplyEdges(s, dir)
-    storedDegreeEdges(s, dir)
-    storedGraphNodes(s, dir)
-    storedPageRankRanks(s, dir)
-    storedWalks(s, dir)
-    ()
-  }
 
   /** Edge table stand-in: supplier→part supply edges from lineitem. */
   private def edges(s: SparkSession, dir: String): DataFrame =

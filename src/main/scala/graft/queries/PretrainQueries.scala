@@ -48,7 +48,7 @@ object PretrainQueries {
     */
   private[graft] def storedCdcChunks(s: SparkSession,
       dir: String): DataFrame =
-    VectorQueries.storedFixture(s,
+    Fixtures.stored(s,
       s"cdc_chunks_w4d8_v1_${Tables.contentStamp(dir, "documents")}") {
       CdcChunking.chunks(Tables.documents(s, dir), "text", "doc_id",
         w = 4, divisor = 8)
@@ -64,7 +64,7 @@ object PretrainQueries {
     */
   private[graft] def storedArrivalBatches(s: SparkSession,
       dir: String): DataFrame =
-    VectorQueries.storedFixture(s,
+    Fixtures.stored(s,
       s"cdc_arrivals_3b_v1_${Tables.contentStamp(dir, "documents")}") {
       val docs = Tables.documents(s, dir)
       val org.apache.spark.sql.Row(iMin: Long, iMax: Long) =
@@ -75,19 +75,6 @@ object PretrainQueries {
         when(col("doc_id") < i1, lit(0))
           .when(col("doc_id") < i2, lit(1)).otherwise(lit(2)))
     }
-
-  /** Queries that read the stored chunk fixture — Bench pre-builds
-    * untimed when any is selected.
-    */
-  val chunkFixtureConsumers: Set[String] = Set(
-    "dedup_cdc_chunks", "boilerplate_chunks", "strip_boilerplate",
-    "cdc_maintained", "sql_cdc_dedup_stored")
-
-  private[graft] def ensureFixtures(s: SparkSession, dir: String): Unit = {
-    storedCdcChunks(s, dir).count()
-    storedArrivalBatches(s, dir).count()
-    ()
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -41,26 +41,13 @@ object TextQueries {
     */
   private[graft] def storedStarClusters(s: SparkSession,
       dir: String): DataFrame =
-    VectorQueries.storedFixture(s,
+    Fixtures.stored(s,
       s"star_clusters_sh5_j50_v1_${Tables.contentStamp(dir, "documents")}") {
       val docs = Tables.documents(s, dir)
       Dedup.duplicateClustersStar(docs, "doc_id",
         Dedup.shingleJaccardPairs(docs, "text", "doc_id",
           shingleLen = 5, minJaccard = 0.5))
     }
-
-  def ensureFixtures(s: SparkSession, dir: String): Unit = {
-    storedStarClusters(s, dir)
-    ()
-  }
-
-  /** Queries that read the stored cluster fixture — Bench pre-builds
-    * untimed when any is selected, so their rows measure the CONSUMER
-    * (gate/split/mining), not a rebuild of the contraction.
-    */
-  val clusterFixtureConsumers: Set[String] = Set(
-    "split_leakage_safe", "dedup_best_rep", "contrastive_triplets",
-    "contrastive_batches")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // THE composed flagship: the document-prep pipeline a training-data

@@ -16,68 +16,9 @@ import graft.sources.Tables
   */
 object VectorQueries {
 
-  /** Write-once content-keyed parquet fixture under the JVM temp dir —
-    * the shared discipline behind every stored artifact here.
-    */
-  private[graft] def storedFixture(s: SparkSession, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_fixtures")
-    val path = new java.io.File(root, tag)
-    def complete = new java.io.File(path, "_SUCCESS").exists()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    if (!complete) {
-      // build into a process-private temp sibling and rename into place:
-      // a concurrently-started driver (Bench + Verify racing) can then
-      // never observe — or clobber — a half-written fixture directory
-      // (ADVICE r19). POSIX rename onto an existing non-empty dir fails,
-      // which is exactly the loser-detects-winner semantics needed.
-      val tmp = new java.io.File(root,
-        s".$tag.tmp.${java.lang.ProcessHandle.current().pid()}")
-      val sc = s.sparkContext
-      val jobTag = s"graft-fixture-${java.util.UUID.randomUUID()}"
-      sc.addJobTag(jobTag)
-      try {
-        build.write.mode("overwrite").parquet(tmp.toString)
-        if (!tmp.renameTo(path) && !complete) {
-          // no winner: `path` is a stale directory a crashed builder
-          // left without `_SUCCESS` — drop it and install once more
-          rm(path)
-          if (!tmp.renameTo(path) && !complete)
-            throw new java.io.IOException(
-              s"could not install fixture $path and no complete copy exists")
-        }
-      } catch { case e: Throwable =>
-        // a failed write throws while its killed sibling tasks still
-        // run, and those recreate `tmp` after it is removed: wait them out
-        awaitTasks(sc, jobTag)
-        throw e
-      } finally {
-        sc.removeJobTag(jobTag)
-        rm(tmp) // the losing copy, or a failed build's leftovers
-      }
-    }
-    s.read.parquet(path.toString)
-  }
-
-  /** Blocks until every task of the jobs tagged `jobTag` has ended, for
-    * at most 60 s. The listener bus is drained first, so each task
-    * launched so far counts as active until its end event arrives.
-    */
-  private def awaitTasks(sc: org.apache.spark.SparkContext, jobTag: String): Unit = {
-    org.apache.spark.sql.graftshim.ListenerShim.waitUntilEmpty(sc)
-    val st = sc.statusTracker
-    def running = st.getJobIdsForTag(jobTag).exists(j =>
-      st.getJobInfo(j).exists(_.stageIds.exists(id =>
-        st.getStageInfo(id).exists(_.numActiveTasks > 0))))
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (running && System.nanoTime() < deadline) Thread.sleep(20)
-  }
-
   /** The NN-descent graph as a STORED artifact — built once per
-    * (corpus, params) into a content-keyed parquet fixture under the
-    * JVM temp dir, then READ by every consumer. At scale the k-NN
+    * (corpus, params) into a content-keyed [[Fixtures.stored]]
+    * fixture, then READ by every consumer. At scale the k-NN
     * graph is exactly this: an expensive offline build persisted
     * alongside the corpus, with the search path only ever reading it
     * (KnnGraphSpec pins stored ≡ inline). Splitting the build out of
@@ -91,7 +32,7 @@ object VectorQueries {
     * is regenerated at the same path (different sf or seed).
     */
   private[graft] def storedKnnGraph(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"knn_graph_k10i3_v1_${Tables.contentStamp(dir, "embeddings")}") {
       graft.operators.KnnGraph.nnDescent(
         Tables.embeddings(s, dir), "embedding", "vec_id", k = 10, iters = 3)
@@ -107,7 +48,7 @@ object VectorQueries {
     * its own timed body (r20).
     */
   private[graft] def storedKnnGraphI2(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"knn_graph_k10i2_v1_${Tables.contentStamp(dir, "embeddings")}") {
       graft.operators.KnnGraph.nnDescent(
         Tables.embeddings(s, dir), "embedding", "vec_id", k = 10, iters = 2)
@@ -118,7 +59,7 @@ object VectorQueries {
     * fresh 10% into. Same rationale as [[storedKnnGraphI2]].
     */
   private[graft] def storedKnnGraphOldI2(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"knn_graph_old_k10i2_v1_${Tables.contentStamp(dir, "embeddings")}") {
       graft.operators.KnnGraph.nnDescent(
         Tables.embeddings(s, dir).where(pmod(col("vec_id"), lit(10)) =!= 0),
@@ -157,7 +98,7 @@ object VectorQueries {
     * by KmeansSql's unrolled replay — not just its consumers.
     */
   private[graft] def storedIvf8Raw(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_ivf8_raw_v2_${Tables.contentStamp(dir, "embeddings")}") {
       centroidsToDF(s, graft.operators.LloydKmeans.fitIvfOwn(
         Tables.embeddings(s, dir)
@@ -206,7 +147,7 @@ object VectorQueries {
     * Own deterministic Lloyd → the dump is hash-gated.
     */
   private[graft] def storedIvf4Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_ivf4_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
       centroidsToDF(s, graft.operators.LloydKmeans.fitIvfOwn(
         snappedNormalized(s, dir)
@@ -220,7 +161,7 @@ object VectorQueries {
     * Own deterministic Lloyd → the dump is hash-gated.
     */
   private[graft] def storedIvf8Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_ivf8_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
       centroidsToDF(s, graft.operators.LloydKmeans.fitIvfOwn(
         snappedNormalized(s, dir)
@@ -234,7 +175,7 @@ object VectorQueries {
     * (LloydKmeans.fitPqOwn) → the dump is hash-gated.
     */
   private[graft] def storedPq8Raw(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_pq8_raw_v2_${Tables.contentStamp(dir, "embeddings")}") {
       codebooksToDF(s, graft.operators.LloydKmeans.fitPqOwn(
         Tables.embeddings(s, dir)
@@ -247,7 +188,7 @@ object VectorQueries {
     }
 
   private[graft] def storedPq16Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_pq16_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
       val sample = snappedNormalized(s, dir)
         .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0)
@@ -265,7 +206,7 @@ object VectorQueries {
     * the dump is hash-gated.
     */
   private[graft] def storedPq64Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_pq64_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
       val sample = snappedNormalized(s, dir)
         .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0)
@@ -286,7 +227,7 @@ object VectorQueries {
     * hash-gated while the index stays rows-only.
     */
   private[graft] def storedAnnAuditPairs(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
+    Fixtures.stored(s,
       s"ann_audit_pairs_v3_${Tables.contentStamp(dir, "embeddings")}") {
       val e = normalizedEmbeddings(s, dir)
       SimilaritySearch.knnJoinIvfPq(
@@ -297,38 +238,6 @@ object VectorQueries {
         nprobe = 6, rerank = 50)
         .select(col("query_id"), col("neighbor_id"))
     }
-
-  /** Pre-build the stored-artifact fixtures OUTSIDE any timed body —
-    * called from Bench's untimed session warm-up so the first
-    * consumer's bench row doesn't absorb the one-off build (at scale
-    * these are offline-persisted index artifacts, not query work).
-    */
-  def ensureFixtures(s: SparkSession, dir: String): Unit = {
-    storedKnnGraph(s, dir)
-    storedKnnGraphI2(s, dir)
-    storedKnnGraphOldI2(s, dir)
-    storedIvf8Raw(s, dir)
-    storedIvf4Norm(s, dir)
-    storedIvf8Norm(s, dir)
-    storedPq8Raw(s, dir)
-    storedPq16Norm(s, dir)
-    storedPq64Norm(s, dir)
-    storedAnnAuditPairs(s, dir)
-    ()
-  }
-
-  /** Queries that read a stored fixture — Bench pre-builds untimed
-    * when any of them is selected.
-    */
-  val fixtureConsumers: Set[String] = Set(
-    "graph_search_topk", "graph_search_ivf_seeded",
-    "knn_graph_insert_stored", "knn_graph_remove_stored",
-    "ann_quantizer_ivf8", "ann_quantizer_ivf4_norm",
-    "ann_quantizer_ivf8_norm", "ann_codebook_pq8_raw",
-    "ann_codebook_pq16_norm", "ann_codebook_pq64_norm",
-    "ann_audit_pairs", "ann_recall_audit", "ann_drift", "ann_index_rows",
-    "sim_ivf_topk", "sim_pq_topk", "knn_join_ivf", "knn_join_pq",
-    "hybrid_batch_rrf_ivf", "dedup_semantic", "decontaminate_semantic")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Multimodal decode plumbing as a gate query: binary payloads

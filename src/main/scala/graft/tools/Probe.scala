@@ -7,12 +7,16 @@ import org.apache.spark.sql.graftshim.ListenerShim
 import graft.{Bench, GraftSession, SparkEntry}
 
 /** Per-query diagnostic: runs each named query cold, then warm, on
-  * Bench's session after Bench's warm-up, and prints one line per run:
+  * Bench's session after Bench's warm-up, and prints one line per stored
+  * fixture that warm-up installs, then one line per run:
   *
   * {{{
+  * [probe] fixture storedKnnGraph build=3.412
   * [probe] <query> cold build=0.012 plan=0.154 exec=1.310 jobs=7 stages=9 compiles=41
   * }}}
   *
+  * A fixture's `build` is the seconds its install took (near zero when
+  * a complete copy was already under `java.io.tmpdir`).
   * `build` is the query function's own time (eager supersteps run
   * here), `plan` is analysis + optimization + physical planning, `exec`
   * is the counted action. Jobs and stages come from a listener, read
@@ -32,7 +36,8 @@ object Probe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Bench.warmSession(spark, sfDir, args.toSet)
+    for ((fixture, secs) <- Bench.warmSession(spark, sfDir))
+      println(f"[probe] fixture $fixture build=$secs%.3f")
     val jobs = new AtomicLong(0)
     val stages = new AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {

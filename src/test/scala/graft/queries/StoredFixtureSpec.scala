@@ -4,12 +4,13 @@ import java.io.File
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** `VectorQueries.storedFixture` must recover from a stale, incomplete
-  * fixture directory and never leave its private temp copy behind.
+/** `Fixtures.stored` must recover from a stale, incomplete fixture
+  * directory, read a concurrent winner's copy when it loses the install,
+  * and never leave its private temp copy behind.
   */
 class StoredFixtureSpec extends SparkSpec {
 
-  private val root = new File(sys.props("java.io.tmpdir"), "graft_fixtures")
+  private val root = Fixtures.root
   private def rm(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
   }
@@ -22,12 +23,26 @@ class StoredFixtureSpec extends SparkSpec {
     try {
       assert(stale.mkdirs())
       java.nio.file.Files.writeString(new File(stale, "part-crashed").toPath, "x")
-      val rows = VectorQueries.storedFixture(spark, tag)(spark.range(3).toDF("id"))
+      val rows = Fixtures.stored(spark, tag)(spark.range(3).toDF("id"))
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(rows == Seq(0L, 1L, 2L))
       assert(new File(stale, "_SUCCESS").exists())
       assert(tmpCopies(tag).isEmpty)
     } finally rm(stale)
+  }
+
+  test("a loser reads the winner's complete copy, and no temp copy stays") {
+    val tag = s"loser_spec_${java.util.UUID.randomUUID()}"
+    val installed = new File(root, tag)
+    try {
+      val rows = Fixtures.stored(spark, tag) {
+        // a concurrent driver wins the install while this build runs
+        spark.range(10, 15).toDF("id").write.parquet(installed.toString)
+        spark.range(3).toDF("id")
+      }.collect().map(_.getLong(0)).sorted.toSeq
+      assert(rows == (10L until 15L))
+      assert(tmpCopies(tag).isEmpty)
+    } finally rm(installed)
   }
 
   test("a build that throws leaves no temp copy") {
@@ -38,7 +53,7 @@ class StoredFixtureSpec extends SparkSpec {
       tags.foreach { tag =>
         val failing = spark.range(0, 64, 1, 32).select(
           when(col("id") === 17, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
-        intercept[Exception](VectorQueries.storedFixture(spark, tag)(failing))
+        intercept[Exception](Fixtures.stored(spark, tag)(failing))
       }
       Thread.sleep(1000) // let any task still running end
       tags.foreach { tag =>
