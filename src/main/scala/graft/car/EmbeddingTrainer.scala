@@ -121,17 +121,8 @@ object EmbeddingTrainer {
     // bench scale.
     def tagged(df: DataFrame, t: String) = df.select(
       lit(t).as("tbl"), col("id"), col("pos"), col("value"))
-    val resumed = checkpointDir.flatMap(d =>
-      graft.operators.DurableIters.latest(spark, d, upTo = cfg.epochs))
-    // init stays LAZY: it is a pure hash projection off spark.range —
-    // recomputing it inside epoch 1's jobs costs less than the dedicated
-    // materialization job a checkpoint would spend on it
-    var emb = resumed.map(_._2).getOrElse(
-      tagged(initFlat(spark, numEntities, cfg.dim, cfg.seed), "e")
-        .unionAll(tagged(initFlat(spark, numRelations, cfg.dim, cfg.seed + 1), "r")))
-    val firstEpoch = resumed.map(_._1 + 1).getOrElse(1L)
-    def entFlat = emb.filter(col("tbl") === "e").drop("tbl")
-    def relFlat = emb.filter(col("tbl") === "r").drop("tbl")
+    def entFlat(emb: DataFrame) = emb.filter(col("tbl") === "e").drop("tbl")
+    def relFlat(emb: DataFrame) = emb.filter(col("tbl") === "r").drop("tbl")
     val losses = Seq.newBuilder[Double]
     val mrrs = Seq.newBuilder[(Int, Double)]
     // (mrr, entityEmb, relationEmb, epoch) of the best evaluation so far
@@ -143,7 +134,18 @@ object EmbeddingTrainer {
         .unionByName(v.select(col("head_id"), col("relation_id"), col("tail_id")))
         .distinct().localCheckpoint(true))
 
-    for (epoch <- firstEpoch to cfg.epochs) {
+    // the epoch's `scored` cache, released once the step materialized
+    var scored: DataFrame = null
+    // init stays LAZY (ownInit = false): it is a pure hash projection off
+    // spark.range — recomputing it inside epoch 1's jobs costs less than
+    // the dedicated materialization job a checkpoint would spend on it.
+    // Durable mode roots each epoch at committed parquet instead of
+    // executor-memory checkpoint blocks: same lineage truncation, plus a
+    // restart point
+    val emb = graft.operators.Iterate(
+        tagged(initFlat(spark, numEntities, cfg.dim, cfg.seed), "e")
+          .unionAll(tagged(initFlat(spark, numRelations, cfg.dim, cfg.seed + 1), "r")),
+        cfg.epochs, checkpointDir, ownInit = false)({ (emb, epoch) =>
       val batch = Triplets.negativeSample(
         Triplets.sampleEdges(edges, cfg.batchFraction, cfg.seed + epoch),
         numEntities, cfg.negRate, seed = cfg.seed + epoch)
@@ -156,7 +158,7 @@ object EmbeddingTrainer {
       // score = S_h + R_r − S_t; g = σ(score) − label, one scalar per
       // triplet. Persisted lazily: the loss action below materializes the
       // cache, the gradient aggregate then reads it back.
-      val scored = batch
+      scored = batch
         .join(entSums.select(col("id").as("head_id"), col("vsum").as("hs")), Seq("head_id"))
         .join(relSums.select(col("id").as("relation_id"), col("vsum").as("rs")), Seq("relation_id"))
         .join(entSums.select(col("id").as("tail_id"), col("vsum").as("ts")), Seq("tail_id"))
@@ -192,30 +194,17 @@ object EmbeddingTrainer {
       // (per-table rates: the two tables have different row counts).
       val decayE = 1.0 - cfg.lr * 2.0 * cfg.regRatio / (numEntities.toDouble * cfg.dim)
       val decayR = 1.0 - cfg.lr * 2.0 * cfg.regRatio / (numRelations.toDouble * cfg.dim)
-      val steppedPlan = emb.join(grad, Seq("tbl", "id"), "left")
+      emb.join(grad, Seq("tbl", "id"), "left")
         .select(col("tbl"), col("id"), col("pos"),
           (col("value") * when(col("tbl") === "e", lit(decayE)).otherwise(lit(decayR))
             - lit(cfg.lr) * coalesce(col("grad"), lit(0.0))).as("value"))
-      // durable mode roots the epoch state at committed parquet instead
-      // of executor-memory checkpoint blocks — same lineage truncation,
-      // plus a restart point
-      val updated = checkpointDir match {
-        case Some(d) => graft.operators.DurableIters.save(steppedPlan, d, epoch)
-        case None => steppedPlan.localCheckpoint(true)
-      }
-      // the pre-step frame's checkpoint blocks are dead once the (eager)
-      // update materialized — free them so a long training run pins one
-      // embedding frame, not one per epoch (no-op when the previous
-      // state was a durable snapshot)
-      CheckpointShim.freeLocalCheckpointIfAny(emb)
-      emb = updated
+    }, { (emb, epoch) =>
       scored.unpersist(false)
-
       // evaluate_every loop (preprocess.py:61-79): validate filtered
       // MRR on the current embeddings, remember the best epoch's tables
       if (cfg.evalEvery > 0 && valid.nonEmpty && epoch % cfg.evalEvery == 0) {
-        val eEmb = assemble(entFlat, "entity_id").localCheckpoint(true)
-        val rEmb = assemble(relFlat, "relation_id").localCheckpoint(true)
+        val eEmb = assemble(entFlat(emb), "entity_id").localCheckpoint(true)
+        val rEmb = assemble(relFlat(emb), "relation_id").localCheckpoint(true)
         // deterministic-but-uniform TakeOrdered sample of the valid
         // split (see Config.evalSample): ordering by a seeded hash of
         // the triplet key picks a representative subset — a plain
@@ -236,9 +225,9 @@ object EmbeddingTrainer {
         // materialization (which at 100× entities turns the eval into
         // the cost that dwarfs the epochs it measures). Sums come
         // straight off the flat tables — no assemble/explode round trip.
-        val eSums = entFlat.groupBy(col("id")).agg(sum(col("value")).as("esum"))
+        val eSums = entFlat(emb).groupBy(col("id")).agg(sum(col("value")).as("esum"))
           .select(col("id").as("entity_id"), col("esum"))
-        val rSums = relFlat.groupBy(col("id")).agg(sum(col("value")).as("rsum"))
+        val rSums = relFlat(emb).groupBy(col("id")).agg(sum(col("value")).as("rsum"))
           .select(col("id").as("relation_id"), col("rsum"))
         val mrrDf = graft.metrics.Scores.filteredMrrAdditive(
           validEval, allTrue.get, eSums, rSums)
@@ -256,7 +245,8 @@ object EmbeddingTrainer {
           CheckpointShim.freeLocalCheckpoint(rEmb)
         }
       }
-    }
+      false
+    })
     // free the filter set — but only if an evaluation actually forced the
     // lazy val (touching it here otherwise would build it just to drop it)
     if (cfg.evalEvery > 0 && valid.nonEmpty && cfg.epochs >= cfg.evalEvery)
@@ -268,8 +258,8 @@ object EmbeddingTrainer {
         // (lazy) assembles and must stay pinned
         CheckpointShim.freeLocalCheckpointIfAny(emb)
         Trained(e, r, losses.result(), mrrs.result(), ep)
-      case None => Trained(assemble(entFlat, "entity_id"), assemble(relFlat, "relation_id"),
-        losses.result(), mrrs.result())
+      case None => Trained(assemble(entFlat(emb), "entity_id"),
+        assemble(relFlat(emb), "relation_id"), losses.result(), mrrs.result())
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
@@ -648,40 +648,22 @@ object Dedup {
     // snapshot and a re-run resumes from the highest committed round
     // (one extra no-change round if the snapshot was already the fixed
     // point — min-label propagation is idempotent past convergence)
-    val resumed = checkpointDir.flatMap(d =>
-      DurableIters.latest(df.sparkSession, d, upTo = maxIters))
-    var labels = resumed.map(_._2.select(col("id"), col("cluster")))
-      .getOrElse(df.select(col(idCol).cast("long").as("id"))
-        .withColumn("cluster", col("id")).localCheckpoint(true))
-    var converged = false
-    var i = resumed.map(_._1).getOrElse(0L)
-    while (!converged && i < maxIters) {
+    val labels = Iterate(df.select(col(idCol).cast("long").as("id"))
+        .withColumn("cluster", col("id")), maxIters, checkpointDir)({ (labels, _) =>
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("cluster").as("ncl")), Seq("dst"))
         .groupBy(col("src")).agg(min(col("ncl")).as("nmin"))
       // carry a per-row `changed` flag through the checkpoint so
       // convergence is a scan of the materialized blocks — not a second
       // labels⋈labels join per iteration
-      val nextPlan = labels
+      labels
         .join(neighborMin.withColumnRenamed("src", "id"), Seq("id"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"),
           (coalesce(col("nmin"), col("cluster")) < col("cluster")).as("changed"))
-      val next = checkpointDir match {
-        case Some(d) => DurableIters.save(nextPlan, d, i + 1)
-        case None => nextPlan.localCheckpoint(true)
-      }
-      converged = next.where(col("changed")).isEmpty
-      // the superseded iteration's checkpoint blocks are dead once the
-      // convergence check ran — free them now instead of letting them
-      // pile up in the block manager until the context cleaner notices
-      // (Dataset.unpersist can't reach localCheckpoint storage)
-      CheckpointShim.freeLocalCheckpointIfAny(labels)
-      labels = next.drop("changed")
-      i += 1
-    }
+    }, (next, _) => next.where(col("changed")).isEmpty)
     CheckpointShim.freeLocalCheckpoint(edges)
-    labels
+    labels.drop("changed")
   }
 
   /** Duplicate-cluster resolution via alternating large-star/small-star
@@ -707,41 +689,17 @@ object Dedup {
     // durable mode: the loop state is the (shrinking) rewired edge set —
     // each round commits a DurableIters snapshot; a re-run resumes from
     // the highest committed round (one extra fixed-point-detection round
-    // if it was already converged)
-    val resumed = checkpointDir.flatMap(d =>
-      DurableIters.latest(df.sparkSession, d, upTo = maxIters))
-    var edges = resumed.map(_._2).getOrElse(pairs
-      .select(col("doc_a").cast("long").as("a"), col("doc_b").cast("long").as("b"))
-      .select(greatest(col("a"), col("b")).as("src"),
-        least(col("a"), col("b")).as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true))
-    var converged = edges.limit(1).isEmpty
-    // Fixed-point test via a set FINGERPRINT instead of count + anti-join
-    // (r20): both sides are DISTINCT (src, dst) sets, so
-    //   fp(S) = (|S|, Σ high32(xxhash64(src,dst)), Σ low32(xxhash64(src,dst)))
-    // with the two 32-bit half-sums kept as exact longs (≤ n·2³² ≤ 2⁶³ —
-    // no overflow under ANSI) satisfies S = T ⇒ fp(S) = fp(T), and for
-    // S ≠ T a collision needs the 64-bit hashes of the differing edges to
-    // cancel exactly in BOTH half-sums: with xxhash64 modeled uniform
-    // that is ~2⁻⁶⁴ per round-comparison — across every star loop in the
-    // suite (~10 rounds × 4 queries) ≪ 10⁻¹⁵ per run, and the downstream
-    // oracle hash-gate would surface a premature stop anyway. The win is
-    // one SCAN-aggregate per round over the just-checkpointed blocks in
-    // place of two counts + a full anti-JOIN of consecutive edge sets
-    // (guide §1.2: fewer passes; the previous round's fingerprint is
-    // remembered, so consecutive rounds never re-touch the old set).
-    def fingerprint(df: DataFrame): (Long, Long, Long) = {
-      val h = xxhash64(col("src"), col("dst"))
-      val r = df.agg(count(lit(1)), sum(shiftrightunsigned(h, 32)),
-        sum(h.bitwiseAND(lit(0xFFFFFFFFL)))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    var fpEdges = if (converged) (0L, 0L, 0L) else fingerprint(edges)
-    var i = resumed.map(_._1).getOrElse(0L)
-    while (!converged && i < maxIters) {
+    // if it was already converged). The loop stops when a round leaves
+    // the set's fingerprint unchanged; the first round fingerprints the
+    // state it reads, so an empty set stops after one empty round.
+    var fpPrev: Option[Row] = None
+    val edges = Iterate(pairs
+        .select(col("doc_a").cast("long").as("a"), col("doc_b").cast("long").as("b"))
+        .select(greatest(col("a"), col("b")).as("src"),
+          least(col("a"), col("b")).as("dst"))
+        .where(col("src") =!= col("dst")).distinct(),
+        maxIters, checkpointDir)({ (edges, _) =>
+      if (fpPrev.isEmpty) fpPrev = Some(edgeSetFingerprint(edges).head())
       // large-star over the symmetric view; the output (v, m) is
       // naturally big→small oriented because v > u ≥ m
       val sym = edges.unionAll(
@@ -755,22 +713,17 @@ object Dedup {
       // small-star on the oriented output: every dst is < src, so the
       // group minimum needs no self-comparison; (u, m) keeps u attached
       val minS = large.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      val nextPlan = large.join(minS, Seq("src"))
+      large.join(minS, Seq("src"))
         .where(col("dst") =!= col("m"))
         .select(col("dst").as("src"), col("m").as("dst"))
         .unionAll(minS.select(col("src"), col("m").as("dst")))
         .distinct()
-      val next = checkpointDir match {
-        case Some(d) => DurableIters.save(nextPlan, d, i + 1)
-        case None => nextPlan.localCheckpoint(true)
-      }
-      val fpNext = fingerprint(next)
-      converged = fpNext == fpEdges
-      fpEdges = fpNext
-      CheckpointShim.freeLocalCheckpointIfAny(edges)
-      edges = next
-      i += 1
-    }
+    }, { (next, _) =>
+      val fpNext = Some(edgeSetFingerprint(next).head())
+      val unchanged = fpNext == fpPrev
+      fpPrev = fpNext
+      unchanged
+    })
     // at the fixed point each non-root appears once as (node, root);
     // the groupBy-min is a no-op there but keeps the result well-defined
     // if maxIters cut convergence short (same caveat as the label loop)
@@ -781,6 +734,27 @@ object Dedup {
       .localCheckpoint(true)
     CheckpointShim.freeLocalCheckpointIfAny(edges)
     result
+  }
+
+  /** One-row fingerprint `(n, hi, lo)` of a DISTINCT (src, dst) long
+    * set, the fixed-point test of [[duplicateClustersStar]] in place of
+    * count + anti-join:
+    *   fp(S) = (|S|, Σ high32(xxhash64(src,dst)), Σ low32(xxhash64(src,dst))).
+    * S = T ⇒ fp(S) = fp(T), and for S ≠ T a collision needs the 64-bit
+    * hashes of the differing edges to cancel exactly in BOTH half-sums:
+    * with xxhash64 modeled uniform that is ~2⁻⁶⁴ per round-comparison,
+    * and the downstream oracle hash-gate would surface a premature stop
+    * anyway. The win is one SCAN-aggregate per round over the
+    * just-checkpointed blocks in place of two counts + a full anti-JOIN
+    * of consecutive edge sets. The half-sums accumulate in
+    * DECIMAL(38,0): each term is below 2³², so an int64 sum throws under
+    * ANSI past ~2³¹ edges. Empty sets sum to null on both sides.
+    */
+  private[operators] def edgeSetFingerprint(edges: DataFrame): DataFrame = {
+    val h = xxhash64(col("src"), col("dst"))
+    edges.agg(count(lit(1)).as("n"),
+      sum(shiftrightunsigned(h, 32).cast("decimal(38,0)")).as("hi"),
+      sum(h.bitwiseAND(lit(0xFFFFFFFFL)).cast("decimal(38,0)")).as("lo"))
   }
 
   /** Embedding near-dup pairs: exact cosine ≥ minCosine within a blocking

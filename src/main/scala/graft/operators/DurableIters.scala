@@ -3,9 +3,12 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Durable snapshots for iterative operators ([[PageRank]],
+/** Durable snapshots for the iterative operators that take a
+  * checkpoint directory ([[PageRank.ranks]],
   * [[Dedup.duplicateClusters]]/[[Dedup.duplicateClustersStar]],
-  * [[graft.car.EmbeddingTrainer]]).
+  * [[graft.car.EmbeddingTrainer.train]]), all of which reach it through
+  * [[Iterate]]'s `durable` mode, and for the streaming sinks' per-batch
+  * state.
   *
   * `localCheckpoint` truncates the per-round lineage but stores blocks
   * in executor memory/disk only: lose one executor mid-run — routine on

@@ -128,18 +128,13 @@ object GraphAlgs {
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var dist = seeds.select(col(nodeCol).as("node")).distinct()
-        .withColumn("cost", lit(0L)).localCheckpoint(true)
-      for (_ <- 1 to rounds) {
+      Iterate(seeds.select(col(nodeCol).as("node")).distinct()
+          .withColumn("cost", lit(0L)), rounds) { (dist, _) =>
         val relaxed = dist.join(e, dist("node") === e("src"))
           .select(e("dst").as("node"), (dist("cost") + e("w")).as("cost"))
-        val next = dist.unionAll(relaxed)
+        dist.unionAll(relaxed)
           .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-          .localCheckpoint(true)
-        CheckpointShim.freeLocalCheckpointIfAny(dist)
-        dist = next
       }
-      dist
     } finally e.unpersist()
   }
 
@@ -161,17 +156,13 @@ object GraphAlgs {
   def kCoreBounded(edges: DataFrame, k: Int, rounds: Int,
       srcCol: String = "a", dstCol: String = "b"): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1; got k=$k rounds=$rounds")
-    var e = canonical(edges, srcCol, dstCol).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    val e = Iterate(canonical(edges, srcCol, dstCol), rounds) { (e, _) =>
       val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val survivors = deg.where(col("deg") >= k)
-      val next = e
-        .join(survivors.select(col("node").as("a")), Seq("a"), "left_semi")
+      e.join(survivors.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(survivors.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")).localCheckpoint(true)
-      CheckpointShim.freeLocalCheckpointIfAny(e)
-      e = next
+        .select(col("a"), col("b"))
     }
     // report nodes of the SURVIVING edge set with their final degrees —
     // a node whose edges all vanished in the last round is already gone
@@ -210,14 +201,10 @@ object GraphAlgs {
           struct(col("t1").as("a"), col("t3").as("b")))).as("__e"))
         .select(col("__e.a").as("a"), col("__e.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-    var e = canonical(edges, srcCol, dstCol).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val kept = e.join(support(e), Seq("a", "b"), "left")
+    val e = Iterate(canonical(edges, srcCol, dstCol), rounds) { (e, _) =>
+      e.join(support(e), Seq("a", "b"), "left")
         .where(coalesce(col("support"), lit(0L)) >= k - 2)
         .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      CheckpointShim.freeLocalCheckpointIfAny(e)
-      e = kept
     }
     val out = e.join(support(e), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
@@ -502,9 +489,10 @@ object GraphAlgs {
       .localCheckpoint(true)
     val nodes = und.select(col("a").as("node")).distinct()
       .localCheckpoint(true)
-    var labels = nodes.withColumn("label", col("node"))
-    var owned = false
-    for (_ <- 1 to rounds) {
+    // the first labels are a projection over the nodes checkpoint, so
+    // Iterate must not free them
+    val labels = Iterate(nodes.withColumn("label", col("node")), rounds,
+        ownInit = false) { (labels, _) =>
       val votes = und
         .join(labels.select(col("node").as("b"), col("label")), Seq("b"))
         .groupBy(col("a"), col("label")).agg(count(lit(1)).as("__v"))
@@ -512,12 +500,8 @@ object GraphAlgs {
         .agg(min(struct((-col("__v")).as("nv"), col("label").as("l")))
           .as("__m"))
         .select(col("a").as("node"), col("__m").getField("l").as("__best"))
-      val next = labels.join(best, Seq("node"), "left")
+      labels.join(best, Seq("node"), "left")
         .select(col("node"), coalesce(col("__best"), col("label")).as("label"))
-        .localCheckpoint(true)
-      if (owned) CheckpointShim.freeLocalCheckpointIfAny(labels)
-      labels = next
-      owned = true
     }
     // the final labels frame is itself checkpointed — loop inputs free
     CheckpointShim.freeLocalCheckpointIfAny(und)
@@ -555,18 +539,13 @@ object GraphAlgs {
       .dropDuplicates("src", "dst", "t")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var arr = seeds.select(col(nodeCol).as("node")).distinct()
-        .withColumn("arrival", lit(startTime)).localCheckpoint(true)
-      for (_ <- 1 to rounds) {
+      Iterate(seeds.select(col(nodeCol).as("node")).distinct()
+          .withColumn("arrival", lit(startTime)), rounds) { (arr, _) =>
         val stepped = arr.join(e, arr("node") === e("src") && e("t") >= arr("arrival"))
           .select(e("dst").as("node"), e("t").as("arrival"))
-        val next = arr.unionAll(stepped)
+        arr.unionAll(stepped)
           .groupBy(col("node")).agg(min(col("arrival")).as("arrival"))
-          .localCheckpoint(true)
-        CheckpointShim.freeLocalCheckpointIfAny(arr)
-        arr = next
       }
-      arr
     } finally e.unpersist()
   }
 
@@ -712,27 +691,24 @@ object GraphAlgs {
     try {
       val nodes = e.select(col("src").as("node"))
         .unionAll(e.select(col("dst").as("node"))).distinct()
-      var state = nodes.groupBy(col("node"))
-        .agg(expr(s"hll_sketch_agg(node, $lgConfigK)").as("__sk"))
-        .localCheckpoint(true)
       // each hop's estimate rows are checkpointed (skinny: node, hop,
       // long) BEFORE the sketch state they read from is freed — the
       // sketch blobs live exactly one hop
-      def estimates(s: DataFrame, hop: Int): DataFrame = s.select(col("node"),
-        lit(hop.toLong).as("hop"),
+      def estimates(s: DataFrame, hop: Long): DataFrame = s.select(col("node"),
+        lit(hop).as("hop"),
         expr("hll_sketch_estimate(__sk)").cast("long").as("ball_est"))
         .localCheckpoint(true)
-      val out = scala.collection.mutable.ArrayBuffer(estimates(state, 0))
-      for (hop <- 1 to maxHops) {
-        val contrib = e.join(state, e("dst") === state("node"))
-          .select(e("src").as("node"), col("__sk"))
-        val next = state.unionAll(contrib)
-          .groupBy(col("node")).agg(expr("hll_union_agg(__sk)").as("__sk"))
-          .localCheckpoint(true)
-        CheckpointShim.freeLocalCheckpointIfAny(state)
-        state = next
-        out += estimates(state, hop)
+      val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val last = Iterate(nodes.groupBy(col("node"))
+          .agg(expr(s"hll_sketch_agg(node, $lgConfigK)").as("__sk")), maxHops) {
+        (state, hop) =>
+          out += estimates(state, hop - 1)
+          val contrib = e.join(state, e("dst") === state("node"))
+            .select(e("src").as("node"), col("__sk"))
+          state.unionAll(contrib)
+            .groupBy(col("node")).agg(expr("hll_union_agg(__sk)").as("__sk"))
       }
+      out += estimates(last, maxHops)
       out.reduce(_ unionAll _)
     } finally e.unpersist()
   }
@@ -758,23 +734,20 @@ object GraphAlgs {
     try {
       val nodes = e.select(col("src").as("node"))
         .unionAll(e.select(col("dst").as("node"))).distinct()
-      var state = Sketches.hllLongFit(nodes, "node", Seq("node"), p)
-        .localCheckpoint(true)
-      def estimates(s: DataFrame, hop: Int): DataFrame =
+      def estimates(s: DataFrame, hop: Long): DataFrame =
         Sketches.hllLongEstimate(s, Seq("node"), p)
-          .select(col("node"), lit(hop.toLong).as("hop"),
+          .select(col("node"), lit(hop).as("hop"),
             col("n_obs"), col("est"))
           .localCheckpoint(true)
-      val out = scala.collection.mutable.ArrayBuffer(estimates(state, 0))
-      for (hop <- 1 to maxHops) {
+      val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val last = Iterate(Sketches.hllLongFit(nodes, "node", Seq("node"), p),
+          maxHops) { (state, hop) =>
+        out += estimates(state, hop - 1)
         val contrib = e.join(state, e("dst") === state("node"))
           .select(e("src").as("node"), col("bucket"), col("rho_max"))
-        val next = Sketches.hllLongMerge(state, contrib, Seq("node"))
-          .localCheckpoint(true)
-        CheckpointShim.freeLocalCheckpointIfAny(state)
-        state = next
-        out += estimates(state, hop)
+        Sketches.hllLongMerge(state, contrib, Seq("node"))
       }
+      out += estimates(last, maxHops)
       out.reduce(_ unionAll _)
     } finally e.unpersist()
   }
@@ -812,12 +785,11 @@ object GraphAlgs {
       .join(states.select(col("state").as("__dst")), Seq("__dst"), "left_semi")
       .join(totals, Seq("__src"))
       .localCheckpoint(true)
-    var pi = states.withColumn("r", lit(scale / nStates))
     // π₀ is a projection OVER the states checkpoint (not its own) —
     // freeing it would kill states' blocks mid-loop (the shim's
-    // documented sharp edge), so only rounds ≥ 2 free their predecessor
-    var piOwned = false
-    for (_ <- 1 to iters) {
+    // documented sharp edge), so Iterate must not own it
+    val pi = Iterate(states.withColumn("r", lit(scale / nStates)), iters,
+        ownInit = false) { (pi, _) =>
       val moved = edges
         .join(broadcast(pi.select(col("state").as("__src"), col("r"))), Seq("__src"))
         // widen the r·n product to DECIMAL(38,0) before the integral
@@ -827,12 +799,8 @@ object GraphAlgs {
         .select(col("__dst").as("state"),
           expr("(CAST(r AS DECIMAL(38,0)) * __n) div __ns").as("__c"))
         .groupBy(col("state")).agg(sum(col("__c")).as("__m"))
-      val next = states.join(moved, Seq("state"), "left")
+      states.join(moved, Seq("state"), "left")
         .select(col("state"), coalesce(col("__m"), lit(0L)).as("r"))
-        .localCheckpoint(true)
-      if (piOwned) CheckpointShim.freeLocalCheckpointIfAny(pi)
-      pi = next
-      piOwned = true
     }
     // the final π is itself checkpointed — the loop inputs can release
     CheckpointShim.freeLocalCheckpointIfAny(states)
@@ -938,9 +906,9 @@ object GraphAlgs {
     val edges = t0.join(totals, Seq("__src")).localCheckpoint(true)
     def pin(v: DataFrame): DataFrame = v.select(col("state"),
       when(col("state") === absorbing, lit(scale)).otherwise(col("v")).as("v"))
-    var value = pin(states.withColumn("v", lit(0L)))
-    var owned = false
-    for (_ <- 1 to iters) {
+    // v₀ is a projection over the states checkpoint: not Iterate's to free
+    val value = Iterate(pin(states.withColumn("v", lit(0L))), iters,
+        ownInit = false) { (value, _) =>
       val pulled = edges
         .join(broadcast(value.select(col("state").as("__dst"), col("v"))),
           Seq("__dst"))
@@ -949,12 +917,8 @@ object GraphAlgs {
         .select(col("__src").as("state"),
           expr("(CAST(v AS DECIMAL(38,0)) * __n) div __ns").as("__c"))
         .groupBy(col("state")).agg(sum(col("__c")).as("__m"))
-      val next = pin(states.join(pulled, Seq("state"), "left")
+      pin(states.join(pulled, Seq("state"), "left")
         .select(col("state"), coalesce(col("__m"), lit(0L)).as("v")))
-        .localCheckpoint(true)
-      if (owned) CheckpointShim.freeLocalCheckpointIfAny(value)
-      value = next
-      owned = true
     }
     val result = value
       .select(col("state"), col("v").as("p_fx"),
@@ -962,7 +926,7 @@ object GraphAlgs {
       .localCheckpoint(true)
     CheckpointShim.freeLocalCheckpointIfAny(states)
     CheckpointShim.freeLocalCheckpointIfAny(edges)
-    if (owned) CheckpointShim.freeLocalCheckpointIfAny(value)
+    CheckpointShim.freeLocalCheckpointIfAny(value)
     result
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointShim
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
@@ -95,8 +94,7 @@ object KnnGraph {
         .select(col("src"), col("dst"),
           VectorOps.cosineWithNorms(col("__sv"), col("__dv"),
             col("__sn"), col("__dn")).as("cos"))
-      var graph = topK(score(bucketed.distinct())).localCheckpoint(true)
-      for (_ <- 1 to iters) {
+      val graph = Iterate(topK(score(bucketed.distinct())), iters) { (graph, _) =>
         // undirected 2-hop frontier: neighbors-of-neighbors both ways
         val und = graph.select(col("src"), col("dst"))
           .unionAll(graph.select(col("dst").as("src"), col("src").as("dst")))
@@ -107,9 +105,7 @@ object KnnGraph {
           .distinct()
           // incumbents rejoin via the union below; don't re-score them
           .join(graph.select(col("src"), col("dst")), Seq("src", "dst"), "left_anti")
-        val next = topK(score(cand).unionAll(graph)).localCheckpoint(true)
-        CheckpointShim.freeLocalCheckpointIfAny(graph)
-        graph = next
+        topK(score(cand).unionAll(graph))
       }
       graph.withColumn("rank", row_number().over(bySrc).cast("long"))
         .select(col("src").as("id"), col("dst").as("neighbor_id"),
@@ -195,11 +191,10 @@ object KnnGraph {
             .limit(seedsPerQuery)
           qv.select(col("query_id")).crossJoin(broadcast(seeds))
       }
-      var beamState = topN(score(seeded), beam).localCheckpoint(true)
       val und = graph.select(col("id").as("node_id"), col("neighbor_id"))
         .unionAll(graph.select(col("neighbor_id").as("node_id"),
           col("id").as("neighbor_id")))
-      for (_ <- 1 to hops) {
+      val beamState = Iterate(topN(score(seeded), beam), hops) { (beamState, _) =>
         val frontier = beamState.select(col("query_id"), col("node_id"))
           .join(und, Seq("node_id"))
           .select(col("query_id"), col("neighbor_id").as("node_id"))
@@ -213,10 +208,7 @@ object KnnGraph {
         // doesn't carry (NoSuchElementException at plan time, seen
         // with same-lineage local-relation corpus+queries); order is
         // semantically free — topN re-sorts the union anyway
-        val next = topN(beamState.unionAll(score(frontier)), beam)
-          .localCheckpoint(true)
-        CheckpointShim.freeLocalCheckpointIfAny(beamState)
-        beamState = next
+        topN(beamState.unionAll(score(frontier)), beam)
       }
       topN(beamState, k)
         .withColumn("rank", row_number().over(byQuery).cast("long"))

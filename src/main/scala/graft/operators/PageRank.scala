@@ -46,17 +46,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * Edges are persisted for the duration (read once, joined every
   * round); each round is lazily stacked and the final frame is
-  * checkpointed once — for iteration counts beyond ~10, checkpoint
-  * inside the loop like [[Dedup.duplicateClusters]] does.
+  * checkpointed once — for iteration counts beyond ~10, materialize
+  * each round through [[Iterate]] as the durable path does.
   */
 object PageRank {
 
   /** @param checkpointDir when set, every iteration commits a durable
-    *   [[DurableIters]] parquet snapshot under this directory and a
-    *   re-run with the same directory RESUMES from the highest committed
-    *   iteration (`None` keeps the in-memory localCheckpoint fast path —
-    *   one materialization for the whole stacked loop, but no
-    *   executor-loss restart point).
+    *   [[DurableIters]] parquet snapshot (via [[Iterate]]) under this
+    *   directory and a re-run with the same directory RESUMES from the
+    *   highest committed iteration (`None` keeps the in-memory
+    *   localCheckpoint fast path — one materialization for the whole
+    *   stacked loop, but no executor-loss restart point).
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000000000L,
@@ -67,19 +67,14 @@ object PageRank {
       handles.foreach(_.unpersist(false))
       out
     case Some(dir) =>
-      val spark = edges.sparkSession
       val (eod, nodes, base, baseTerm) = prepare(edges, srcCol, dstCol, scale)
       // fixed-point integer iterations are bit-deterministic, so a run
       // resumed from a committed round is identical to an uninterrupted
       // one — DurableItersSpec proves it (and that the snapshot is
-      // actually what the resumed run reads)
-      val (done, r0) = DurableIters.latest(spark, dir, upTo = iters) match {
-        case Some((k, snap)) => (k, snap)
-        case None => (0L, nodes.withColumn("r", lit(base)))
-      }
-      var r = r0
-      for (i <- done + 1 to iters.toLong)
-        r = DurableIters.save(iterate(eod, nodes, r, baseTerm, 1), dir, i)
+      // actually what the resumed run reads). The lazy r₀ rides round
+      // 1's write instead of a materialization of its own.
+      val r = Iterate(nodes.withColumn("r", lit(base)), iters, Some(dir),
+          ownInit = false)((r, _) => iterate(eod, nodes, r, baseTerm, 1))
       val out = r.select(col("node"), col("r").as("pr_fx"))
       Seq(eod, nodes).foreach(_.unpersist(false))
       out
@@ -313,35 +308,18 @@ object PageRank {
     * unchanged, and results stay bit-identical across partitionings
     * and engines.
     *
-    * Same plan shape as [[ranks]]: the seed flag is folded into the
-    * pre-partitioned node table by one broadcast join before the loop;
-    * each round still pays exactly one shuffle.
+    * Annotates the raw edges as [[ranks]] does and runs
+    * [[personalizedRanksFromPrepared]], which folds the seed flag into
+    * the pre-partitioned node table by one broadcast join before the
+    * loop; each round still pays exactly one shuffle.
     */
   def personalizedRanks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, iters: Int = 5,
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, "iters must be positive")
     val (eod, nodes, _, _) = prepare(edges, srcCol, dstCol, scale)
-    val seedN = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-    val nS = seedN.count()
-    require(nS > 0, "personalizedRanks: no seed appears in the graph")
-    require(nS <= scale,
-      s"seed count $nS exceeds scale=$scale — per-seed base mass would be 0")
-    val base = scale / nS
-    val baseTerm = (15L * base) / 100L
-    val nodesBt = nodes
-      .join(broadcast(seedN.withColumn("__s", lit(1))), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__s").isNotNull, lit(baseTerm)).otherwise(lit(0L)).as("bt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rInit = nodesBt.select(col("node"),
-      when(col("bt") > 0, lit(base)).otherwise(lit(0L)).as("r"))
-    val r = iterateTeleport(eod, nodesBt, rInit, iters)
-      .select(col("node"), col("r").as("ppr_fx"))
-    val out = r.localCheckpoint(true)
-    Seq(eod, nodes, nodesBt).foreach(_.unpersist(false))
-    out
+    try personalizedRanksFromPrepared(eod, nodes, seeds, iters, scale)
+    finally Seq(eod, nodes).foreach(_.unpersist(false))
   }
 
   /** Weighted PageRank — the random surfer follows an out-edge with
@@ -350,9 +328,9 @@ object PageRank {
     * contribution `(r·w) div Σw_out`. Parallel input edges merge their
     * weights up front (a multigraph IS its weight table here).
     *
-    * Same guarantees as [[ranks]], same one-exchange-per-round shape:
-    * the weighted-outdegree annotation folds into the SAME
-    * src-partitioned window pass `prepare` uses for counts, and mass
+    * Annotates the raw edges with their merged weight and weighted
+    * out-degree and runs [[weightedRanksFromPrepared]]. Same guarantees
+    * as [[ranks]], same one-exchange-per-round loop, and mass
     * conservation still bounds every sum below `scale`
     * (Σ_e (r·w) div Σw ≤ r by truncation) — so the damping multiply
     * cannot overflow at any graph size. The per-edge product widens to
@@ -366,39 +344,16 @@ object PageRank {
   def weightedRanks(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, iters: Int = 5,
       scale: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1, "iters must be positive")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    val eod = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val ewod = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("long").as("w"))
       .where(col("w") > 0)
-      .repartition(parts, col("src"))
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .withColumn("wout", sum(col("w")).over(w))
+      .withColumn("wout", sum(col("w"))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = eod.select(col("src").as("node"))
-      .unionAll(eod.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "weighted pagerank needs a non-empty edge list")
-    require(n <= scale,
-      s"node count $n exceeds scale=$scale — base mass scale/n would be 0")
-    val base = scale / n
-    val baseTerm = (15L * base) / 100L
-    var r = nodes.withColumn("r", lit(base))
-    for (_ <- 1 to iters) {
-      val summed = eod
-        .join(r.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          expr("(CAST(r AS DECIMAL(38,0)) * w) div wout").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("m"))
-      r = nodes.join(summed, Seq("node"), "left")
-        .select(col("node"), (lit(baseTerm) +
-          expr("(85 * coalesce(m, cast(0 as bigint))) div 100")).as("r"))
-    }
-    val out = r.select(col("node"), col("r").as("pr_fx"))
-      .localCheckpoint(true)
-    Seq(eod, nodes).foreach(_.unpersist(false))
-    out
+    val nodes = ewod.select(col("src").as("node"))
+      .unionAll(ewod.select(col("dst").as("node"))).distinct()
+    try weightedRanksFromPrepared(ewod, nodes, iters, scale)
+    finally ewod.unpersist(false)
   }
 }

@@ -23,7 +23,10 @@ object CheckpointShim {
     * OTHER live checkpoints' blocks, which would be unrecoverable
     * (their lineage is already truncated). Sharp edge that remains:
     * passing a projection over a checkpoint someone else still holds
-    * frees the shared blocks — call this only on frames you own.
+    * frees the shared blocks — call this only on frames you own. Loops
+    * that start from such a projection run through
+    * `graft.operators.Iterate` with `ownInit = false`, which never frees
+    * the caller's first state.
     */
   def freeLocalCheckpoint(ds: Dataset[_], blocking: Boolean = false): Unit = {
     val leaves = ds.queryExecution.analyzed.collect { case lr: LogicalRDD => lr }

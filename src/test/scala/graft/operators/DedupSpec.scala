@@ -176,6 +176,10 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
+    // no pairs at all: every id is its own cluster
+    val alone = Dedup.duplicateClusters(docs, "doc_id", pairs.limit(0))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(alone == (1L to 7L).map(i => i -> i).toMap)
   }
 
   test("duplicateClustersStar: same chains, and ≡ label propagation on a random graph") {
@@ -186,6 +190,9 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
+    val alone = Dedup.duplicateClustersStar(docs, "doc_id", pairs.limit(0))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(alone == (1L to 7L).map(i => i -> i).toMap)
     // a 24-node chain (diameter >> the star round count) plus seeded
     // random extra edges: star rounds must agree with min-label
     // propagation everywhere — both converge to min-reachable-id
@@ -202,6 +209,25 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byStar == byLabel)
     assert(byStar.values.toSet == Set(1L)) // one chain-connected component
+  }
+
+  test("edge-set fingerprint: exact decimal half-sums, order-independent") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.sql.types.DecimalType
+    val rnd = new scala.util.Random(7)
+    val set = Seq.fill(500)((rnd.nextLong(), rnd.nextLong())).distinct
+    // xxhash64(src, dst) seeds the second column's hash with the first's
+    val hashes = set.map { case (s, d) => XXH64.hashLong(d, XXH64.hashLong(s, 42L)) }
+    val hi = hashes.map(h => BigInt(h >>> 32)).sum
+    val lo = hashes.map(h => BigInt(h & 0xFFFFFFFFL)).sum
+    val shuffled = rnd.shuffle(set).toDF("src", "dst").repartition(7)
+    val fp = Dedup.edgeSetFingerprint(shuffled)
+    assert(Seq("hi", "lo").forall(c => fp.schema(c).dataType == DecimalType(38, 0)))
+    val r = fp.head()
+    assert(r.getLong(0) == set.size)
+    assert(BigInt(r.getDecimal(1).toBigInteger) == hi)
+    assert(BigInt(r.getDecimal(2).toBigInteger) == lo)
   }
 
   test("bloom semi-join reduction never changes crossCorpusOverlap results") {
