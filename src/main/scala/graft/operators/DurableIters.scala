@@ -7,8 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * checkpoint directory ([[PageRank.ranks]],
   * [[Dedup.duplicateClusters]]/[[Dedup.duplicateClustersStar]],
   * [[graft.car.EmbeddingTrainer.train]]), all of which reach it through
-  * [[Iterate]]'s `durable` mode, and for the streaming sinks' per-batch
-  * state.
+  * [[Iterate]]'s `durable` mode, and for the maintained streams' per-batch
+  * state, which reaches it only through [[graft.streaming.Maintained]]
+  * (write-only commits: a stream never reads back the snapshot it wrote).
   *
   * `localCheckpoint` truncates the per-round lineage but stores blocks
   * in executor memory/disk only: lose one executor mid-run — routine on
@@ -28,13 +29,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DurableIters {
 
-  /** Write `df` as the committed snapshot of round `iter` and return a
-    * frame rooted at the durable files.
+  /** Write `df` as the committed snapshot of round `iter`. */
+  def commit(df: DataFrame, dir: String, iter: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/iter=$iter")
+
+  /** [[commit]], then return a frame rooted at the durable files (reading
+    * them back infers the schema, which is one more Spark job).
     */
   def save(df: DataFrame, dir: String, iter: Long): DataFrame = {
-    val p = s"$dir/iter=$iter"
-    df.write.mode("overwrite").parquet(p)
-    df.sparkSession.read.parquet(p)
+    commit(df, dir, iter)
+    df.sparkSession.read.parquet(s"$dir/iter=$iter")
   }
 
   /** Highest committed snapshot with round ≤ `upTo`, or None when the

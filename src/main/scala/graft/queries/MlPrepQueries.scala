@@ -90,7 +90,7 @@ object MlPrepQueries {
     // gate. State is players²-bounded forever.
     "bt_maintained" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val base = java.nio.file.Files.createTempDirectory("bt-gate")
+      val base = graft.streaming.Maintained.stateRoot("bt-gate")
       val skDir = s"$base/counts"
       val byBest = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id").asc)

@@ -153,7 +153,7 @@ object PretrainQueries {
     // state must equal the one-shot dedup_cdc_chunks EXACTLY (the
     // oracle chunks the raw text directly — maintained ≡ one-shot).
     "cdc_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("cdc-gate")
+      val base = graft.streaming.Maintained.stateRoot("cdc-gate")
       val storeDir = s"$base/chunks"
       // arrival batches come pre-persisted (storedArrivalBatches) —
       // the timed body is the maintenance claim itself: per-batch

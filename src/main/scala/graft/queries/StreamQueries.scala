@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -309,23 +309,16 @@ object StreamQueries {
     // itself (the scd2_apply / agg_delta_merge discipline applied to
     // sequence state).
     "markov_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("markov-gate")
+      val base = graft.streaming.Maintained.stateRoot("markov-gate")
       val countsDir = s"$base/counts"
       val lastDir = s"$base/last"
       val e = Tables.events(s, dir).select(col("user_id"), col("event_type"),
         expr("ts_ns div 1000").as("ts_us"), col("event_id"))
-      val Row(tMin: Long, tMax: Long) =
-        e.agg(min(col("ts_us")), max(col("ts_us"))).head
-      val t1 = tMin + (tMax - tMin) / 3
-      val t2 = tMin + 2 * (tMax - tMin) / 3
       // time-window batches preserve each user's cross-batch order —
       // the MarkovStream input contract
-      graft.streaming.MarkovStream.applyBatch(
-        e.where(col("ts_us") < t1), countsDir, lastDir, 0)
-      graft.streaming.MarkovStream.applyBatch(
-        e.where(col("ts_us") >= t1 && col("ts_us") < t2), countsDir, lastDir, 1)
-      graft.streaming.MarkovStream.applyBatch(
-        e.where(col("ts_us") >= t2), countsDir, lastDir, 2)
+      graft.streaming.Maintained.thirds(e, "ts_us").zipWithIndex.foreach {
+        case (b, i) => graft.streaming.MarkovStream.applyBatch(b, countsDir, lastDir, i)
+      }
       graft.streaming.MarkovStream.transitions(s, countsDir)
     }),
 
@@ -563,22 +556,16 @@ object StreamQueries {
     // idempotent/commutative, so even out-of-order batches converge to
     // the one-shot report; the oracle (funnel_conversion's) proves it.
     "funnel_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("funnel-gate")
+      val base = graft.streaming.Maintained.stateRoot("funnel-gate")
       val stateDir = s"$base/state"
       val e = Tables.events(s, dir).select(col("user_id"), col("event_type"),
         expr("ts_ns div 1000").as("ts_us"))
-      val Row(tMin: Long, tMax: Long) =
-        e.agg(min(col("ts_us")), max(col("ts_us"))).head
-      val t1 = tMin + (tMax - tMin) / 3
-      val t2 = tMin + 2 * (tMax - tMin) / 3
       // deliberately apply MIDDLE batch last: the min-merge must not
       // care about cross-batch event order
-      graft.streaming.FunnelStream.applyBatch(
-        e.where(col("ts_us") < t1), stateDir, 0)
-      graft.streaming.FunnelStream.applyBatch(
-        e.where(col("ts_us") >= t2), stateDir, 1)
-      graft.streaming.FunnelStream.applyBatch(
-        e.where(col("ts_us") >= t1 && col("ts_us") < t2), stateDir, 2)
+      val Seq(early, middle, late) = graft.streaming.Maintained.thirds(e, "ts_us")
+      Seq(early, late, middle).zipWithIndex.foreach {
+        case (b, i) => graft.streaming.FunnelStream.applyBatch(b, stateDir, i)
+      }
       graft.streaming.FunnelStream.report(s, stateDir)
     }),
 

@@ -247,20 +247,12 @@ object TextQueries {
     // proof for the retrieval index (df/dl/avgdl all derive from the
     // postings, so nothing can drift out of sync).
     "bm25_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("bm25-gate")
+      val base = graft.streaming.Maintained.stateRoot("bm25-gate")
       val ixDir = s"$base/postings"
       val docs = Tables.documents(s, dir)
-      val org.apache.spark.sql.Row(iMin: Long, iMax: Long) =
-        docs.agg(min(col("doc_id")), max(col("doc_id"))).head
-      val i1 = iMin + (iMax - iMin) / 3
-      val i2 = iMin + 2 * (iMax - iMin) / 3
-      graft.streaming.Bm25Stream.applyBatch(
-        docs.where(col("doc_id") < i1), "text", "doc_id", ixDir, 0)
-      graft.streaming.Bm25Stream.applyBatch(
-        docs.where(col("doc_id") >= i1 && col("doc_id") < i2),
-        "text", "doc_id", ixDir, 1)
-      graft.streaming.Bm25Stream.applyBatch(
-        docs.where(col("doc_id") >= i2), "text", "doc_id", ixDir, 2)
+      graft.streaming.Maintained.thirds(docs, "doc_id").zipWithIndex.foreach {
+        case (b, i) => graft.streaming.Bm25Stream.applyBatch(b, "text", "doc_id", ixDir, i)
+      }
       val queries = docs.where(pmod(col("doc_id"), lit(50)) === 0)
         .select(col("doc_id").as("query_id"),
           array_join(slice(split(col("text"), " ", -1), 1, 8), " ").as("qtext"))
@@ -1239,7 +1231,7 @@ object TextQueries {
     // hash-match the one-shot oracle (maintained ≡ one-shot BY the
     // oracle — counters are additive, so batch packing cannot matter).
     "cms_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("cms-gate")
+      val base = graft.streaming.Maintained.stateRoot("cms-gate")
       val skDir = s"$base/counters"
       val toks = Tables.documents(s, dir)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
@@ -1250,7 +1242,7 @@ object TextQueries {
           toks.where(pmod(col("doc_id"), lit(3)) === b),
           "token", width = 2048, depth = 4, skDir, b)
       graft.operators.Sketches.cmsEstimate(toks,
-          graft.streaming.CmsStream.counters(s, skDir),
+          graft.streaming.Maintained.current(s, skDir),
           "token", width = 2048, depth = 4)
         .orderBy(col("est").desc, col("token").asc).limit(20)
     }),
@@ -1367,21 +1359,13 @@ object TextQueries {
     // gate itself (the quantile/kmv discipline applied to the
     // contamination index).
     "winnow_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("winnow-gate")
+      val base = graft.streaming.Maintained.stateRoot("winnow-gate")
       val ixDir = s"$base/index"
       val docs = Tables.documents(s, dir)
-      val org.apache.spark.sql.Row(iMin: Long, iMax: Long) =
-        docs.agg(min(col("doc_id")), max(col("doc_id"))).head
-      val i1 = iMin + (iMax - iMin) / 3
-      val i2 = iMin + 2 * (iMax - iMin) / 3
-      graft.streaming.WinnowStream.applyBatch(
-        docs.where(col("doc_id") < i1), "text", "doc_id", ixDir, 0)
-      graft.streaming.WinnowStream.applyBatch(
-        docs.where(col("doc_id") >= i1 && col("doc_id") < i2),
-        "text", "doc_id", ixDir, 1)
-      graft.streaming.WinnowStream.applyBatch(
-        docs.where(col("doc_id") >= i2), "text", "doc_id", ixDir, 2)
-      graft.streaming.WinnowStream.index(s, ixDir)
+      graft.streaming.Maintained.thirds(docs, "doc_id").zipWithIndex.foreach {
+        case (b, i) => graft.streaming.WinnowStream.applyBatch(b, "text", "doc_id", ixDir, i)
+      }
+      graft.streaming.Maintained.current(s, ixDir)
         .groupBy(col("doc"))
         .agg(count(lit(1)).as("n_fp"), min(col("fp")).as("fp_min"),
           expr("bit_xor(fp)").as("fp_xor"))

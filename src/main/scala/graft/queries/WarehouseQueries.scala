@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.car.Splits
@@ -729,7 +729,7 @@ object WarehouseQueries {
     // counts — incremental ≡ one-shot is proven BY the oracle (it IS
     // ab_sprt_curve's), the markov_maintained discipline.
     "sprt_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("sprt-gate")
+      val base = graft.streaming.Maintained.stateRoot("sprt-gate")
       val countsDir = s"$base/counts"
       val gate = conv(substring(md5(col("user_id").cast("string")), 1, 4),
         16, 10).cast("long")
@@ -740,16 +740,9 @@ object WarehouseQueries {
             1L).otherwise(0L)).as("conv"))
         .select(when(gate < 32768, lit("A")).otherwise(lit("B")).as("arm"),
           expr("first_us div 3600000000L").as("hour"), col("conv"))
-      val Row(hMin: Long, hMax: Long) =
-        users.agg(min(col("hour")), max(col("hour"))).head
-      val h1 = hMin + (hMax - hMin) / 3
-      val h2 = hMin + 2 * (hMax - hMin) / 3
-      graft.streaming.SprtStream.applyBatch(
-        users.where(col("hour") < h1), countsDir, 0)
-      graft.streaming.SprtStream.applyBatch(
-        users.where(col("hour") >= h1 && col("hour") < h2), countsDir, 1)
-      graft.streaming.SprtStream.applyBatch(
-        users.where(col("hour") >= h2), countsDir, 2)
+      graft.streaming.Maintained.thirds(users, "hour").zipWithIndex.foreach {
+        case (b, i) => graft.streaming.SprtStream.applyBatch(b, countsDir, i)
+      }
       graft.streaming.SprtStream.curve(s, countsDir,
         p0 = 0.4, p1 = 0.5, bound = 2.94443898)
     }),
@@ -828,7 +821,7 @@ object WarehouseQueries {
     // replay oracle (a register only ever grows, so batch packing
     // cannot matter). State ≤ groups·2^p rows forever.
     "hll_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("hll-gate")
+      val base = graft.streaming.Maintained.stateRoot("hll-gate")
       val skDir = s"$base/registers"
       val ev = Tables.events(s, dir)
         .select(col("event_type"), col("user_id"), col("event_id"))
@@ -890,34 +883,20 @@ object WarehouseQueries {
     // over everything so far (bottom-k merge law), so THE SAME oracle
     // as sketch_quantiles_kmv proves maintained ≡ one-shot each round.
     "sketch_quantiles_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("qsk-gate")
+      val base = graft.streaming.Maintained.stateRoot("qsk-gate")
       val skDir = s"$base/sketch"
       val e = Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("value"))
-      val Row(iMin: Long, iMax: Long) =
-        e.agg(min(col("event_id")), max(col("event_id"))).head
-      val i1 = iMin + (iMax - iMin) / 3
-      val i2 = iMin + 2 * (iMax - iMin) / 3
-      graft.streaming.QuantileStream.applyBatch(
-        e.where(col("event_id") < i1), "event_type", "value", "event_id",
-        256, skDir, 0)
-      graft.streaming.QuantileStream.applyBatch(
-        e.where(col("event_id") >= i1 && col("event_id") < i2),
-        "event_type", "value", "event_id", 256, skDir, 1)
-      graft.streaming.QuantileStream.applyBatch(
-        e.where(col("event_id") >= i2), "event_type", "value", "event_id",
-        256, skDir, 2)
+      graft.streaming.Maintained.thirds(e, "event_id").zipWithIndex.foreach {
+        case (b, i) => graft.streaming.QuantileStream.applyBatch(
+          b, "event_type", "value", "event_id", 256, skDir, i)
+      }
       graft.streaming.QuantileStream.quantiles(s, skDir, "event_type",
         Seq(500000L, 900000L, 990000L))
         .select(col("event_type"), col("q_ppm"), col("n_sample"),
           (round(col("est"), 4) + lit(0.0)).as("est"))
     }),
 
-    // Streaming KMV maintenance (KmvStream): the per-segment distinct-
-    // part sketch folded from three orderkey-range batches — merge =
-    // dedup + re-rank + cut (the spec-pinned mergeability law), so the
-    // maintained estimates are bit-identical to the one-shot sketch
-    // over everything so far; the oracle proves it.
     // Incremental JOIN-view maintenance with BOTH sides growing
     // (JoinStream): orders and customers arrive as three key-range
     // batches each — an order can precede its customer — and the
@@ -926,39 +905,31 @@ object WarehouseQueries {
     // sides). The rollup of the maintained view hash-matches the
     // direct-join oracle: maintained ≡ one-shot, proven in the gate.
     "join_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("join-gate")
+      val base = graft.streaming.Maintained.stateRoot("join-gate")
       val dirs = (s"$base/view", s"$base/a", s"$base/b")
       val o = Tables.orders(s, dir).select(col("o_orderkey"),
         col("o_custkey").as("custkey"), col("o_totalprice"))
       val c = Tables.customer(s, dir).select(
         col("c_custkey").as("custkey"), col("c_mktsegment"))
-      val Row(okMin: Long, okMax: Long) =
-        o.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head
-      val Row(ckMin: Long, ckMax: Long) =
-        c.agg(min(col("custkey")), max(col("custkey"))).head
-      val o1 = okMin + (okMax - okMin) / 3
-      val o2 = okMin + 2 * (okMax - okMin) / 3
-      val c1 = ckMin + (ckMax - ckMin) / 3
-      val c2 = ckMin + 2 * (ckMax - ckMin) / 3
-      graft.streaming.JoinStream.applyBatch(
-        o.where(col("o_orderkey") < o1), c.where(col("custkey") < c1),
-        Seq("custkey"), dirs, 0)
-      graft.streaming.JoinStream.applyBatch(
-        o.where(col("o_orderkey") >= o1 && col("o_orderkey") < o2),
-        c.where(col("custkey") >= c1 && col("custkey") < c2),
-        Seq("custkey"), dirs, 1)
-      graft.streaming.JoinStream.applyBatch(
-        o.where(col("o_orderkey") >= o2), c.where(col("custkey") >= c2),
-        Seq("custkey"), dirs, 2)
-      graft.streaming.JoinStream.view(s, dirs._1)
+      val os = graft.streaming.Maintained.thirds(o, "o_orderkey")
+      val cs = graft.streaming.Maintained.thirds(c, "custkey")
+      os.zip(cs).zipWithIndex.foreach { case ((ob, cb), i) =>
+        graft.streaming.JoinStream.applyBatch(ob, cb, Seq("custkey"), dirs, i)
+      }
+      graft.streaming.Maintained.current(s, dirs._1)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_rows"),
           round(sum(col("o_totalprice").cast(DecimalType(18, 6)))
             .cast("double"), 4).as("total_price"))
     }),
 
+    // Streaming KMV maintenance (KmvStream): the per-segment distinct-
+    // part sketch folded from three orderkey-range batches — merge =
+    // dedup + re-rank + cut (the spec-pinned mergeability law), so the
+    // maintained estimates are bit-identical to the one-shot sketch
+    // over everything so far; the oracle proves it.
     "kmv_maintained" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("kmv-gate")
+      val base = graft.streaming.Maintained.stateRoot("kmv-gate")
       val skDir = s"$base/sketch"
       // materialize the enrichment join ONCE — each micro-batch is a
       // filter over it. In production the batches ARRIVE materialized
@@ -975,17 +946,10 @@ object WarehouseQueries {
         .select(col("c_mktsegment").as("seg"), col("l_partkey"),
           col("l_orderkey"))
         .localCheckpoint(true)
-      val Row(kMin: Long, kMax: Long) =
-        items.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head
-      val k1 = kMin + (kMax - kMin) / 3
-      val k2 = kMin + 2 * (kMax - kMin) / 3
-      graft.streaming.KmvStream.applyBatch(
-        items.where(col("l_orderkey") < k1), "seg", "l_partkey", 256, skDir, 0)
-      graft.streaming.KmvStream.applyBatch(
-        items.where(col("l_orderkey") >= k1 && col("l_orderkey") < k2),
-        "seg", "l_partkey", 256, skDir, 1)
-      graft.streaming.KmvStream.applyBatch(
-        items.where(col("l_orderkey") >= k2), "seg", "l_partkey", 256, skDir, 2)
+      graft.streaming.Maintained.thirds(items, "l_orderkey").zipWithIndex.foreach {
+        case (b, i) => graft.streaming.KmvStream.applyBatch(
+          b, "seg", "l_partkey", 256, skDir, i)
+      }
       graft.streaming.KmvStream.estimates(s, skDir, "seg", 256)
     }),
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{DurableIters, Retrieval}
+import graft.operators.Retrieval
 
 /** Continuous maintenance of the BM25 postings index — the streaming
   * half of `bm25_batch_topk`: each arriving document batch appends its
@@ -11,48 +11,21 @@ import graft.operators.{DurableIters, Retrieval}
   * so no side statistics can drift out of sync. Documents never span
   * batches, so append IS the merge (exact by construction);
   * `bm25_maintained` proves maintained ≡ one-shot BY the oracle, which
-  * scores from the raw text directly. Versioned [[DurableIters]]
-  * snapshots make a crash-replayed batch recompute from the prior
-  * state instead of double-appending — the discipline shared with
-  * [[WinnowStream]] / [[JoinStream]].
+  * scores from the raw text directly. Exactly-once via [[Maintained]]:
+  * a replayed batch appends to the prior state, not to its own output.
   */
 object Bm25Stream {
 
   /** Fold one micro-batch of documents into the postings index. */
   def applyBatch(batch: DataFrame, textCol: String, idCol: String,
-      indexDir: String, batchId: Long): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, indexDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = Retrieval.postingsOf(batch, idCol, textCol)
-    val merged = prev match {
-      case Some(p) => p.unionByName(delta)
-      case None => delta
+      indexDir: String, batchId: Long): Unit =
+    Maintained.fold(batch.sparkSession, indexDir, batchId) { prev =>
+      val delta = Retrieval.postingsOf(batch, idCol, textCol)
+      prev.fold(delta)(_.unionByName(delta))
     }
-    DurableIters.save(merged, indexDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over a document source. */
-  def maintain(docs: DataFrame, textCol: String, idCol: String,
-      indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          applyBatch(batch.toDF(), textCol, idCol, indexDir, batchId)
-      }
-      .start()
-
-  /** The latest maintained postings index. */
-  def index(spark: SparkSession, indexDir: String): DataFrame =
-    DurableIters.latest(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no postings index under $indexDir"))._2
 
   /** BM25 top-k reads against the maintained index. */
   def topK(spark: SparkSession, indexDir: String, queries: DataFrame,
       k: Int): DataFrame =
-    Retrieval.scorePostings(index(spark, indexDir), queries, k)
+    Retrieval.scorePostings(Maintained.current(spark, indexDir), queries, k)
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, Preference}
+import graft.operators.Preference
 
 /** Continuous arena-rating maintenance from a match stream — the
   * leaderboard that updates per batch without re-scanning match
@@ -12,8 +11,7 @@ import graft.operators.{DurableIters, Preference}
   * [[Preference.bradleyTerryFromCounts]] re-derives ratings from the
   * state at any time. Ratings from folded counts ≡ one-shot over all
   * matches BY the oracle (`bt_maintained` shares `bt_ratings`' replay
-  * SQL). Exactly-once via the versioned [[DurableIters]] discipline
-  * shared with [[CmsStream]]/[[HllStream]].
+  * SQL). Exactly-once via [[Maintained]].
   */
 object BtStream {
 
@@ -21,38 +19,20 @@ object BtStream {
     * count matrix.
     */
   def applyBatch(batch: DataFrame, winnerCol: String, loserCol: String,
-      stateDir: String, batchId: Long): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, stateDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = batch.groupBy(col(winnerCol).as("i"), col(loserCol).as("j"))
-      .agg(count(lit(1)).as("n_ij"))
-    val merged = prev match {
-      case Some(p) => p.select(col("i"), col("j"), col("n_ij"))
-        .unionByName(delta)
-        .groupBy(col("i"), col("j")).agg(sum(col("n_ij")).as("n_ij"))
-      case None => delta
-    }
-    DurableIters.save(merged, stateDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over (winner, loser) rows. */
-  def maintain(rows: DataFrame, winnerCol: String, loserCol: String,
-      stateDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), winnerCol, loserCol, stateDir,
-          batchId)
+      stateDir: String, batchId: Long): Unit =
+    Maintained.fold(batch.sparkSession, stateDir, batchId) { prev =>
+      val delta = batch.groupBy(col(winnerCol).as("i"), col(loserCol).as("j"))
+        .agg(count(lit(1)).as("n_ij"))
+      prev match {
+        case Some(p) => p.select(col("i"), col("j"), col("n_ij"))
+          .unionByName(delta)
+          .groupBy(col("i"), col("j")).agg(sum(col("n_ij")).as("n_ij"))
+        case None => delta
       }
-      .start()
+    }
 
   /** Live leaderboard from the latest maintained count matrix. */
   def ratings(spark: SparkSession, stateDir: String,
-      iters: Int = 3): DataFrame = {
-    val counts = DurableIters.latest(spark, stateDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no BT state under $stateDir"))._2
-    Preference.bradleyTerryFromCounts(counts, iters)
-  }
+      iters: Int = 3): DataFrame =
+    Preference.bradleyTerryFromCounts(Maintained.current(spark, stateDir), iters)
 }

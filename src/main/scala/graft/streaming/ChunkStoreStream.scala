@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{CdcChunking, DurableIters}
+import graft.operators.CdcChunking
 
 /** Continuous maintenance of the CDC chunk store — the streaming half
   * of `dedup_cdc_chunks`: each arriving document batch chunks locally
@@ -13,61 +13,33 @@ import graft.operators.{CdcChunking, DurableIters}
   * the maintained store equals the one-shot computation EXACTLY
   * (`cdc_maintained` proves it by the oracle, which chunks the raw text
   * directly). State is unique-chunk-sized (16-byte fingerprints +
-  * counts), never corpus-sized. Versioned [[DurableIters]] snapshots
-  * make a crash-replayed batch recompute from the prior state instead
-  * of double-counting — the discipline shared with [[Bm25Stream]] /
-  * [[WinnowStream]].
+  * counts), never corpus-sized. Exactly-once via [[Maintained]]: a
+  * replayed batch recomputes from the prior state instead of
+  * double-counting.
   */
 object ChunkStoreStream {
 
   /** Fold one micro-batch of documents into the chunk store. */
   def applyBatch(batch: DataFrame, textCol: String, idCol: String,
-      storeDir: String, batchId: Long, w: Int = 4, divisor: Int = 8): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, storeDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = CdcChunking.chunks(batch, textCol, idCol, w, divisor)
-      .groupBy(col("chunk_md5"))
-      .agg(count(lit(1)).as("cnt"), max(col("n_tokens")).as("n_tok"))
-    val merged = prev match {
-      case Some(p) => p.unionByName(delta)
+      storeDir: String, batchId: Long, w: Int = 4, divisor: Int = 8): Unit =
+    Maintained.fold(batch.sparkSession, storeDir, batchId) { prev =>
+      val delta = CdcChunking.chunks(batch, textCol, idCol, w, divisor)
         .groupBy(col("chunk_md5"))
-        .agg(sum(col("cnt")).as("cnt"), max(col("n_tok")).as("n_tok"))
-      case None => delta
-    }
-    DurableIters.save(merged, storeDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over a document source — the same
-    * foreachBatch fold [[applyBatch]] runs when replayed by hand, so
-    * batch-fold ≡ trigger-fold by construction (the file-source spec
-    * proves it across triggers and a restart).
-    */
-  def maintain(docs: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, storeDir: String, checkpointDir: String,
-      w: Int = 4, divisor: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          applyBatch(batch.toDF(), textCol, idCol, storeDir, batchId, w,
-            divisor)
+        .agg(count(lit(1)).as("cnt"), max(col("n_tokens")).as("n_tok"))
+      prev match {
+        case Some(p) => p.unionByName(delta)
+          .groupBy(col("chunk_md5"))
+          .agg(sum(col("cnt")).as("cnt"), max(col("n_tok")).as("n_tok"))
+        case None => delta
       }
-      .start()
-
-  /** The latest maintained chunk store. */
-  def store(spark: SparkSession, storeDir: String): DataFrame =
-    DurableIters.latest(spark, storeDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no chunk store under $storeDir"))._2
+    }
 
   /** The corpus dedup report read off the maintained store — same
     * schema and values as [[CdcChunking.dedupReport]] on the full
     * corpus.
     */
   def report(spark: SparkSession, storeDir: String): DataFrame =
-    store(spark, storeDir).agg(
+    Maintained.current(spark, storeDir).agg(
         sum(col("cnt")).as("n_chunks"),
         count(lit(1)).as("n_unique_chunks"),
         sum(col("cnt") * col("n_tok")).as("total_tokens"),

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, Sketches}
+import org.apache.spark.sql.DataFrame
+import graft.operators.Sketches
 
 /** Continuous count-min-sketch maintenance from an append stream — the
   * streaming half of `heavy_hitters_cms`: the (depth × width) counter
@@ -13,42 +12,17 @@ import graft.operators.{DurableIters, Sketches}
   * counters are additive, so the maintained table is bit-identical to
   * the one-shot sketch over all rows so far whatever the batch packing
   * (`cms_maintained` proves it BY the oracle — same replay SQL as the
-  * one-shot query). Exactly-once via the versioned [[DurableIters]]
-  * discipline shared with [[KmvStream]]/[[MarkovStream]]: merge FROM
-  * snapshots strictly below the batch id, overwrite idempotently.
-  * State is ≤ depth·width rows — constant forever, whatever arrives.
+  * one-shot query). Exactly-once via [[Maintained]]; read the table
+  * with [[Maintained.current]]. State is ≤ depth·width rows — constant
+  * forever, whatever arrives.
   */
 object CmsStream {
 
   /** Fold one micro-batch of term rows into the counter table. */
   def applyBatch(batch: DataFrame, termCol: String, width: Int, depth: Int,
-      stateDir: String, batchId: Long, seed: Long = 42L): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, stateDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = Sketches.cmsFit(batch, termCol, width, depth, seed)
-    val merged = prev match {
-      case Some(p) => Sketches.cmsMerge(p, delta)
-      case None => delta
+      stateDir: String, batchId: Long, seed: Long = 42L): Unit =
+    Maintained.fold(batch.sparkSession, stateDir, batchId) { prev =>
+      val delta = Sketches.cmsFit(batch, termCol, width, depth, seed)
+      prev.fold(delta)(Sketches.cmsMerge(_, delta))
     }
-    DurableIters.save(merged, stateDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over term rows. */
-  def maintain(rows: DataFrame, termCol: String, width: Int, depth: Int,
-      stateDir: String, checkpointDir: String,
-      seed: Long = 42L): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), termCol, width, depth, stateDir,
-          batchId, seed)
-      }
-      .start()
-
-  /** The latest maintained counter table. */
-  def counters(spark: SparkSession, stateDir: String): DataFrame =
-    DurableIters.latest(spark, stateDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no CMS state under $stateDir"))._2
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, Sketches}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Sketches
 
 /** Continuous own-HLL maintenance from an append stream — live distinct
   * counts per group without re-scanning history, with the whole
@@ -15,44 +14,21 @@ import graft.operators.{DurableIters, Sketches}
   * LOSSLESS — the maintained table is bit-identical to the one-shot
   * sketch over all rows so far whatever the batch packing
   * (`hll_maintained` proves it BY the oracle — same replay SQL as the
-  * one-shot query). Exactly-once via the versioned [[DurableIters]]
-  * discipline shared with [[CmsStream]]/[[KmvStream]]: merge FROM
-  * snapshots strictly below the batch id, overwrite idempotently.
-  * State is ≤ groups·2^p rows — constant per group forever.
+  * one-shot query). Exactly-once via [[Maintained]]. State is
+  * ≤ groups·2^p rows — constant per group forever.
   */
 object HllStream {
 
   /** Fold one micro-batch of (group, key) rows into the registers. */
   def applyBatch(batch: DataFrame, keyCol: String, groupCol: String,
-      p: Int, stateDir: String, batchId: Long): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, stateDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = Sketches.hllLongFit(batch, keyCol, groupCol, p)
-    val merged = prev match {
-      case Some(pr) => Sketches.hllLongMerge(pr, delta, Seq(groupCol))
-      case None => delta
+      p: Int, stateDir: String, batchId: Long): Unit =
+    Maintained.fold(batch.sparkSession, stateDir, batchId) { prev =>
+      val delta = Sketches.hllLongFit(batch, keyCol, groupCol, p)
+      prev.fold(delta)(Sketches.hllLongMerge(_, delta, Seq(groupCol)))
     }
-    DurableIters.save(merged, stateDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over (group, key) rows. */
-  def maintain(rows: DataFrame, keyCol: String, groupCol: String, p: Int,
-      stateDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), keyCol, groupCol, p, stateDir,
-          batchId)
-      }
-      .start()
 
   /** Live distinct estimates from the latest maintained registers. */
   def estimates(spark: SparkSession, stateDir: String, groupCol: String,
-      p: Int): DataFrame = {
-    val regs = DurableIters.latest(spark, stateDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no HLL state under $stateDir"))._2
-    Sketches.hllLongEstimate(regs, Seq(groupCol), p)
-  }
+      p: Int): DataFrame =
+    Sketches.hllLongEstimate(Maintained.current(spark, stateDir), Seq(groupCol), p)
 }

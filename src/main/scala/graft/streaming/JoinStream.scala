@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.DurableIters
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental maintenance of an equi-join VIEW when BOTH sides grow —
   * the materialized denormalized-view problem: at 100 TB, re-joining
@@ -14,9 +15,10 @@ import graft.operators.DurableIters
   * accumulated B, accumulated A against dB, dA against dB) and appends —
   * never a re-join of the accumulated sides with each other. State is
   * the view plus both accumulated inputs (which a warehouse keeps as
-  * tables anyway), all [[DurableIters]]-versioned so a replayed batch
-  * is absorbed (insert-only deltas; distinct-by-construction inputs —
-  * append-only facts with unique keys per row, the CDC-insert shape).
+  * tables anyway), each committed through [[Maintained]] so a replayed
+  * batch is absorbed (insert-only deltas; distinct-by-construction
+  * inputs — append-only facts with unique keys per row, the CDC-insert
+  * shape). Read the view with [[Maintained.current]] on its directory.
   *
   * `join_maintained` proves maintained ≡ one-shot BY the oracle, which
   * computes the direct join of everything.
@@ -30,9 +32,9 @@ object JoinStream {
       dirs: (String, String, String), batchId: Long): Unit = {
     val s = deltaA.sparkSession
     val (viewDir, aDir, bDir) = dirs
-    val prevView = DurableIters.latest(s, viewDir, upTo = batchId - 1).map(_._2)
-    val prevA = DurableIters.latest(s, aDir, upTo = batchId - 1).map(_._2)
-    val prevB = DurableIters.latest(s, bDir, upTo = batchId - 1).map(_._2)
+    val prevView = Maintained.before(s, viewDir, batchId)
+    val prevA = Maintained.before(s, aDir, batchId)
+    val prevB = Maintained.before(s, bDir, batchId)
     val newPairs = (prevB match {
       case Some(b) => deltaA.join(b, joinCols)
       case None => deltaA.join(deltaB.limit(0), joinCols)
@@ -40,16 +42,10 @@ object JoinStream {
       case Some(a) => a.join(deltaB, joinCols)
       case None => deltaA.limit(0).join(deltaB, joinCols)
     }).unionByName(deltaA.join(deltaB, joinCols))
-    val view = prevView match {
-      case Some(v) => v.unionByName(newPairs)
-      case None => newPairs
-    }
-    DurableIters.save(view, viewDir, batchId)
-    DurableIters.save(prevA.map(_.unionByName(deltaA)).getOrElse(deltaA),
-      aDir, batchId)
-    DurableIters.save(prevB.map(_.unionByName(deltaB)).getOrElse(deltaB),
-      bDir, batchId)
-    ()
+    Maintained.commit(prevView.fold(newPairs)(_.unionByName(newPairs)),
+      viewDir, batchId)
+    Maintained.commit(prevA.fold(deltaA)(_.unionByName(deltaA)), aDir, batchId)
+    Maintained.commit(prevB.fold(deltaB)(_.unionByName(deltaB)), bDir, batchId)
   }
 
   /** Start the maintenance stream over a TAGGED insert log — one
@@ -61,26 +57,11 @@ object JoinStream {
     */
   def maintain(rows: DataFrame, sideCol: String, aCols: Seq[String],
       bCols: Seq[String], joinCols: Seq[String],
-      dirs: (String, String, String),
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val b = batch.toDF()
-          applyBatch(
-            b.where(col(sideCol) === "a").select(aCols.map(col): _*),
-            b.where(col(sideCol) === "b").select(bCols.map(col): _*),
-            joinCols, dirs, batchId)
-      }
-      .start()
-  }
-
-  /** The latest maintained join view. */
-  def view(spark: SparkSession, viewDir: String): DataFrame =
-    DurableIters.latest(spark, viewDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no maintained join view under $viewDir"))._2
+      dirs: (String, String, String), checkpointDir: String): StreamingQuery =
+    Maintained.sink(rows, checkpointDir) { (b, batchId) =>
+      applyBatch(
+        b.where(col(sideCol) === "a").select(aCols.map(col): _*),
+        b.where(col(sideCol) === "b").select(bCols.map(col): _*),
+        joinCols, dirs, batchId)
+    }
 }

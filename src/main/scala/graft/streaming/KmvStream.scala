@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, KmvSketch}
+import graft.operators.KmvSketch
 
 /** Continuous KMV (theta) sketch maintenance from an append stream —
   * the streaming half of `sketch_kmv_set_ops`: per-group bottom-k
@@ -17,50 +16,30 @@ import graft.operators.{DurableIters, KmvSketch}
   * cut at k — a pure set function, so the maintained sketch is
   * bit-identical to the one-shot sketch over all rows so far whatever
   * the batch packing (`kmv_maintained` proves it BY the oracle).
-  * Exactly-once via the versioned [[DurableIters]] discipline shared
-  * with [[MarkovStream]]/[[SprtStream]]: merge FROM snapshots strictly
-  * below the batch id, overwrite idempotently. State is (groups·k)
-  * rows — constant per group forever.
+  * Exactly-once via [[Maintained]]. State is (groups·k) rows — constant
+  * per group forever.
   */
 object KmvStream {
 
   /** Fold one micro-batch of (group, value) rows into the sketch. */
   def applyBatch(batch: DataFrame, groupCol: String, valueCol: String,
-      k: Int, sketchDir: String, batchId: Long): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, sketchDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = KmvSketch.sketch(batch, Seq(groupCol), valueCol, k)
-    val merged = prev match {
-      case Some(p) =>
-        val w = Window.partitionBy(col(groupCol)).orderBy(col("h"))
-        p.select(col(groupCol), col("h"))
-          .unionByName(delta.select(col(groupCol), col("h")))
-          .distinct()
-          .withColumn("rk", row_number().over(w))
-          .where(col("rk") <= k)
-      case None => delta
-    }
-    DurableIters.save(merged, sketchDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over (group, value) rows. */
-  def maintain(rows: DataFrame, groupCol: String, valueCol: String, k: Int,
-      sketchDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), groupCol, valueCol, k, sketchDir,
-          batchId)
+      k: Int, sketchDir: String, batchId: Long): Unit =
+    Maintained.fold(batch.sparkSession, sketchDir, batchId) { prev =>
+      val delta = KmvSketch.sketch(batch, Seq(groupCol), valueCol, k)
+      prev match {
+        case Some(p) =>
+          val w = Window.partitionBy(col(groupCol)).orderBy(col("h"))
+          p.select(col(groupCol), col("h"))
+            .unionByName(delta.select(col(groupCol), col("h")))
+            .distinct()
+            .withColumn("rk", row_number().over(w))
+            .where(col("rk") <= k)
+        case None => delta
       }
-      .start()
+    }
 
   /** Live distinct estimates from the latest maintained sketch. */
   def estimates(spark: SparkSession, sketchDir: String, groupCol: String,
-      k: Int): DataFrame = {
-    val sk = DurableIters.latest(spark, sketchDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no KMV state under $sketchDir"))._2
-    KmvSketch.estimate(sk, Seq(groupCol), k)
-  }
+      k: Int): DataFrame =
+    KmvSketch.estimate(Maintained.current(spark, sketchDir), Seq(groupCol), k)
 }

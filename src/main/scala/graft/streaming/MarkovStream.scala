@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.DurableIters
 
 /** Continuous Markov transition-matrix maintenance from an append
   * stream — the streaming half of the `event_markov` query: the live
@@ -17,15 +15,10 @@ import graft.operators.DurableIters
   *    produces its boundary transition (within-batch pairs alone would
   *    silently drop one transition per user per batch).
   *
-  * Exactly-once on replay, the [[MomentsStream]]/[[RollupStream]]
-  * discipline: a batch merges FROM the latest snapshots with id
-  * strictly below its own and overwrites its own version directories
-  * idempotently (the [[DurableIters]] contract) — a crash-retried
-  * batch cannot double-count, and both state dirs re-save under the
-  * same version so a crash BETWEEN the two saves is also healed by
-  * the retry. Because counts are exact integers, the maintained table
-  * is bit-identical to the one-shot lead-window computation over all
-  * rows so far, independent of batch packing (MarkovStreamSpec pins
+  * Exactly-once via [[Maintained]], both directories committed under
+  * the same batch id. Because counts are exact integers, the maintained
+  * table is bit-identical to the one-shot lead-window computation over
+  * all rows so far, independent of batch packing (MarkovStreamSpec pins
   * it). Input contract: each user's events arrive in (ts, id) order
   * across batches — the append-log replay shape; an out-of-order feed
   * needs a watermarked reorder upstream.
@@ -38,10 +31,8 @@ object MarkovStream {
   def applyBatch(batch: DataFrame, countsDir: String, lastDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val prevCounts = DurableIters.latest(spark, countsDir, upTo = batchId - 1)
-      .map(_._2)
-    val prevLast = DurableIters.latest(spark, lastDir, upTo = batchId - 1)
-      .map(_._2)
+    val prevCounts = Maintained.before(spark, countsDir, batchId)
+    val prevLast = Maintained.before(spark, lastDir, batchId)
     val e = batch.select(col("user_id"), col("event_type"),
       col("ts_us").cast("long").as("ts_us"), col("event_id"))
     val byTime = Window.partitionBy(col("user_id"))
@@ -76,30 +67,15 @@ object MarkovStream {
         .unionByName(batchLast)
       case None => batchLast
     }
-    DurableIters.save(counts, countsDir, batchId)
-    DurableIters.save(newLast, lastDir, batchId)
-    ()
+    Maintained.commit(counts, countsDir, batchId)
+    Maintained.commit(newLast, lastDir, batchId)
   }
-
-  /** Start the maintenance stream over a streaming frame with columns
-    * (user_id, event_type, ts_us, event_id).
-    */
-  def maintain(rows: DataFrame, countsDir: String, lastDir: String,
-      checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), countsDir, lastDir, batchId)
-      }
-      .start()
 
   /** The live transition table from the latest maintained counts, in
     * the `event_markov` output shape (src, dst, n, n_src, p_ppm).
     */
   def transitions(spark: SparkSession, countsDir: String): DataFrame = {
-    val counts = DurableIters.latest(spark, countsDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no transition state under $countsDir"))._2
+    val counts = Maintained.current(spark, countsDir)
     val totals = counts.groupBy(col("src")).agg(sum(col("n")).as("n_src"))
     counts.join(totals, Seq("src"))
       .select(col("src"), col("dst"), col("n"), col("n_src"),

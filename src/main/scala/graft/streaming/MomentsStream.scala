@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, Stats}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Stats
 
 /** Continuous second-moment maintenance from an append stream — the
   * streaming half of [[graft.operators.Stats.corrState]], mirroring
@@ -13,13 +12,10 @@ import graft.operators.{DurableIters, Stats}
   * [[Stats.corrFromState]] call over a one-row table — no history
   * rescan, ever.
   *
-  * Exactly-once on replay: a batch merges FROM the latest snapshot
-  * with id strictly below its own and overwrites its own version
-  * directory idempotently (the [[DurableIters]] contract), so a
-  * crash-retried batch cannot double-count. Because the state entries
-  * are exact sums, the maintained state is bit-identical to a
-  * one-shot [[Stats.corrState]] over all rows so far, independent of
-  * how rows were packed into batches — MomentsStreamSpec pins both.
+  * Exactly-once via [[Maintained]]. Because the state entries are exact
+  * sums, the maintained state is bit-identical to a one-shot
+  * [[Stats.corrState]] over all rows so far, independent of how rows
+  * were packed into batches — MomentsStreamSpec pins both.
   *
   * State is ONE row of 1 + k + k(k+1)/2 decimals regardless of
   * stream volume — the smallest possible "how are my features
@@ -32,32 +28,15 @@ object MomentsStream {
     */
   def applyBatch(batch: DataFrame, stateDir: String, batchId: Long,
       cols: Seq[String]): Unit = {
-    val spark = batch.sparkSession
     val delta = Stats.corrState(batch, cols)
-    val merged = DurableIters.latest(spark, stateDir, upTo = batchId - 1) match {
-      case Some((_, state)) =>
-        Stats.mergeCorrStates(state.unionByName(delta), cols)
+    Maintained.fold(batch.sparkSession, stateDir, batchId) {
+      case Some(state) => Stats.mergeCorrStates(state.unionByName(delta), cols)
       case None => delta
     }
-    DurableIters.save(merged, stateDir, batchId)
-    ()
   }
-
-  /** Start the maintenance stream over a streaming row frame. */
-  def maintain(rows: DataFrame, stateDir: String, checkpointDir: String,
-      cols: Seq[String]): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), stateDir, batchId, cols)
-      }
-      .start()
 
   /** The live correlation matrix from the latest maintained state. */
   def correlations(spark: SparkSession, stateDir: String,
       cols: Seq[String]): DataFrame =
-    Stats.corrFromState(
-      DurableIters.latest(spark, stateDir)
-        .getOrElse(throw new IllegalStateException(
-          s"no moment state under $stateDir"))._2, cols)
+    Stats.corrFromState(Maintained.current(spark, stateDir), cols)
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, QuantileSketch}
+import graft.operators.QuantileSketch
 
 /** Continuous quantile-sketch maintenance from an append stream — the
   * streaming half of `sketch_quantiles_kmv`: per-group bottom-k-by-md5
@@ -16,51 +15,32 @@ import graft.operators.{DurableIters, QuantileSketch}
   * the batch packing — `sketch_quantiles_maintained` proves it BY the
   * oracle, which computes the one-shot sketch directly. Replayed
   * batches collapse in the pre-merge `distinct()` (the same id draws
-  * the same hash and carries the same value), giving idempotent
-  * retries under the versioned [[DurableIters]] discipline shared with
-  * [[KmvStream]]. State is (groups·k) rows — constant per group
+  * the same hash and carries the same value); exactly-once via
+  * [[Maintained]]. State is (groups·k) rows — constant per group
   * forever.
   */
 object QuantileStream {
 
   /** Fold one micro-batch of (group, id, value) rows into the sketch. */
   def applyBatch(batch: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, k: Int, sketchDir: String, batchId: Long): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, sketchDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = QuantileSketch.sketch(batch, Seq(groupCol), valueCol,
-      idCol, k)
-    val merged = prev match {
-      case Some(p) =>
-        QuantileSketch.merge(
-          p.select(col(groupCol), col("h"), col("v"))
-            .unionByName(delta.select(col(groupCol), col("h"), col("v")))
-            .distinct(),
-          Seq(groupCol), k)
-      case None => delta
-    }
-    DurableIters.save(merged, sketchDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over (group, id, value) rows. */
-  def maintain(rows: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, k: Int, sketchDir: String,
-      checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), groupCol, valueCol, idCol, k, sketchDir,
-          batchId)
+      idCol: String, k: Int, sketchDir: String, batchId: Long): Unit =
+    Maintained.fold(batch.sparkSession, sketchDir, batchId) { prev =>
+      val delta = QuantileSketch.sketch(batch, Seq(groupCol), valueCol,
+        idCol, k)
+      prev match {
+        case Some(p) =>
+          QuantileSketch.merge(
+            p.select(col(groupCol), col("h"), col("v"))
+              .unionByName(delta.select(col(groupCol), col("h"), col("v")))
+              .distinct(),
+            Seq(groupCol), k)
+        case None => delta
       }
-      .start()
+    }
 
   /** Live quantile reads from the latest maintained sketch. */
   def quantiles(spark: SparkSession, sketchDir: String, groupCol: String,
-      qPpms: Seq[Long]): DataFrame = {
-    val sk = DurableIters.latest(spark, sketchDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no quantile-sketch state under $sketchDir"))._2
-    QuantileSketch.quantiles(sk, Seq(groupCol), qPpms)
-  }
+      qPpms: Seq[Long]): DataFrame =
+    QuantileSketch.quantiles(Maintained.current(spark, sketchDir),
+      Seq(groupCol), qPpms)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, IncrementalAgg}
+import org.apache.spark.sql.DataFrame
+import graft.operators.IncrementalAgg
 
 /** Continuous rollup maintenance from an append stream — the streaming
   * half of [[graft.operators.IncrementalAgg]]: each micro-batch folds
@@ -12,13 +11,10 @@ import graft.operators.{DurableIters, IncrementalAgg}
   * pins the invariant: after any number of micro-batches, the
   * maintained state equals `IncrementalAgg.fit` over all rows so far.
   *
-  * Durability/exactly-once: the same [[DurableIters]] versioned-
-  * snapshot discipline as [[ScdStream]] — a batch merges FROM the
-  * latest snapshot with id strictly below its own and overwrites its
-  * own version directory idempotently, so sink replays after a crash
-  * cannot double-count a batch (spec-pinned). Because the combiners
-  * are commutative and associative, the result is also independent of
-  * how rows were packed into batches.
+  * Exactly-once via [[Maintained]] (spec-pinned: sink replays after a
+  * crash cannot double-count a batch). Because the combiners are
+  * commutative and associative, the result is also independent of how
+  * rows were packed into batches.
   *
   * State size is |keys|, not |rows| — the rollup's group-by columns
   * bound it, which is what makes this viable forever on an unbounded
@@ -31,25 +27,9 @@ object RollupStream {
     * Exposed for tests and batch backfill (call with increasing ids).
     */
   def applyBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      keyCols: Seq[String], valueCol: String): Unit = {
-    val spark = batch.sparkSession
-    val merged = DurableIters.latest(spark, stateDir, upTo = batchId - 1) match {
-      case Some((_, state)) =>
-        IncrementalAgg.applyDelta(state, batch, keyCols, valueCol)
-      case None =>
-        IncrementalAgg.fit(batch, keyCols, valueCol)
+      keyCols: Seq[String], valueCol: String): Unit =
+    Maintained.fold(batch.sparkSession, stateDir, batchId) {
+      case Some(state) => IncrementalAgg.applyDelta(state, batch, keyCols, valueCol)
+      case None => IncrementalAgg.fit(batch, keyCols, valueCol)
     }
-    DurableIters.save(merged, stateDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over a streaming row frame. */
-  def maintain(rows: DataFrame, stateDir: String, checkpointDir: String,
-      keyCols: Seq[String], valueCol: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), stateDir, batchId, keyCols, valueCol)
-      }
-      .start()
 }

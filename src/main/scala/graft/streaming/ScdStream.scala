@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, Scd}
+import org.apache.spark.sql.DataFrame
+import graft.operators.Scd
 
 /** Continuous SCD2 dimension maintenance from a CDC stream — the
   * streaming half of [[graft.operators.Scd]]: each micro-batch of
@@ -12,14 +11,10 @@ import graft.operators.{DurableIters, Scd}
   * after any number of micro-batches, the maintained table equals
   * `Scd.buildHistory` over the full concatenated log.
   *
-  * Durability/exactly-once: the history is a [[DurableIters]]-versioned
-  * parquet sequence keyed by micro-batch id. A batch merges FROM the
-  * latest snapshot with id strictly BELOW its own (`upTo = batchId-1`),
-  * so a replayed batch (sink retry after a crash) re-reads its
-  * predecessor's committed state — never its own half-written output —
-  * and overwrites its version directory idempotently. State per batch
-  * is the history table itself; per-key change counts bound its growth,
-  * which is the definition of a dimension.
+  * Exactly-once via [[Maintained]]: the history is a versioned parquet
+  * sequence keyed by micro-batch id. State per batch is the history
+  * table itself; per-key change counts bound its growth, which is the
+  * definition of a dimension.
   *
   * Ordering contract (same as `applyChanges`): batches arrive in
   * nondecreasing event-time order per key — the normal shape of a CDC
@@ -31,26 +26,9 @@ object ScdStream {
     * tests and for batch backfill (call with increasing ids).
     */
   def applyBatch(batch: DataFrame, historyDir: String, batchId: Long,
-      keyCol: String, tsCol: String, tieCol: String, stateCol: String): Unit = {
-    val spark = batch.sparkSession
-    val merged = DurableIters.latest(spark, historyDir, upTo = batchId - 1) match {
-      case Some((_, hist)) =>
-        Scd.applyChanges(hist, batch, keyCol, tsCol, tieCol, stateCol)
-      case None =>
-        Scd.buildHistory(batch, keyCol, tsCol, tieCol, stateCol)
+      keyCol: String, tsCol: String, tieCol: String, stateCol: String): Unit =
+    Maintained.fold(batch.sparkSession, historyDir, batchId) {
+      case Some(hist) => Scd.applyChanges(hist, batch, keyCol, tsCol, tieCol, stateCol)
+      case None => Scd.buildHistory(batch, keyCol, tsCol, tieCol, stateCol)
     }
-    DurableIters.save(merged, historyDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over a streaming change frame. */
-  def maintain(changes: DataFrame, historyDir: String, checkpointDir: String,
-      keyCol: String, tsCol: String, tieCol: String, stateCol: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), historyDir, batchId,
-          keyCol, tsCol, tieCol, stateCol)
-      }
-      .start()
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DurableIters, Sprt}
+import graft.operators.Sprt
 
 /** Continuous SPRT maintenance from an arrival stream — the streaming
   * half of `ab_sprt_curve`: the always-peeking monitor is only honest
@@ -13,49 +12,29 @@ import graft.operators.{DurableIters, Sprt}
   *
   * State is ONE versioned counts table (arm, hour, n, c) — purely
   * additive, no boundary carry (each subject arrives exactly once, in
-  * its arrival-hour batch), merged with the
-  * [[MomentsStream]]/[[MarkovStream]] exactly-once discipline: a batch
-  * merges FROM snapshots strictly below its own id and overwrites its
-  * own version idempotently, so a crash-retried batch cannot
-  * double-count. Counts are exact integers ⇒ the maintained curve is
-  * bit-identical to the one-shot batch computation whatever the batch
-  * packing (the `sprt_maintained` gate row proves it BY the oracle,
-  * the markov_maintained pattern).
+  * its arrival-hour batch), exactly-once via [[Maintained]]. Counts are
+  * exact integers ⇒ the maintained curve is bit-identical to the
+  * one-shot batch computation whatever the batch packing (the
+  * `sprt_maintained` gate row proves it BY the oracle, the
+  * markov_maintained pattern).
   */
 object SprtStream {
 
   /** Fold one micro-batch of (arm, hour, conv) arrival rows. */
-  def applyBatch(batch: DataFrame, countsDir: String, batchId: Long): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, countsDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = batch.groupBy(col("arm"), col("hour"))
-      .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
-    val merged = prev match {
-      case Some(p) => p.unionByName(delta)
-        .groupBy(col("arm"), col("hour"))
-        .agg(sum(col("n")).as("n"), sum(col("c")).as("c"))
-      case None => delta
-    }
-    DurableIters.save(merged, countsDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over (arm, hour, conv) rows. */
-  def maintain(rows: DataFrame, countsDir: String,
-      checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), countsDir, batchId)
+  def applyBatch(batch: DataFrame, countsDir: String, batchId: Long): Unit =
+    Maintained.fold(batch.sparkSession, countsDir, batchId) { prev =>
+      val delta = batch.groupBy(col("arm"), col("hour"))
+        .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
+      prev match {
+        case Some(p) => p.unionByName(delta)
+          .groupBy(col("arm"), col("hour"))
+          .agg(sum(col("n")).as("n"), sum(col("c")).as("c"))
+        case None => delta
       }
-      .start()
+    }
 
   /** The live decision curve from the latest maintained counts. */
   def curve(spark: SparkSession, countsDir: String, p0: Double, p1: Double,
-      bound: Double): DataFrame = {
-    val counts = DurableIters.latest(spark, countsDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no SPRT state under $countsDir"))._2
-    Sprt.curve(counts, "arm", "hour", p0, p1, bound)
-  }
+      bound: Double): DataFrame =
+    Sprt.curve(Maintained.current(spark, countsDir), "arm", "hour", p0, p1, bound)
 }

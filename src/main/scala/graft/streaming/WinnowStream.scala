@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{Dedup, DurableIters}
+import graft.operators.Dedup
 
 /** Continuous maintenance of the winnowing contamination index — the
   * streaming half of `winnow_index`: each arriving document batch adds
@@ -16,49 +15,23 @@ import graft.operators.{Dedup, DurableIters}
   * outputs IS the one-shot index over all documents so far —
   * `winnow_maintained` proves it BY the oracle, which computes the
   * one-shot index directly. Replayed batches collapse in the distinct
-  * (same doc → same fingerprints), giving idempotent retries under the
-  * versioned [[DurableIters]] discipline shared with [[QuantileStream]] /
-  * [[KmvStream]]. State is the index itself (~2/(window+1) of the
-  * corpus's shingle count — the winnowing density guarantee), and each
-  * batch's cost is one fingerprint pass over the batch plus a
-  * state-sized union.
+  * (same doc → same fingerprints); exactly-once via [[Maintained]], and
+  * [[Maintained.current]] reads the index. State is the index itself
+  * (~2/(window+1) of the corpus's shingle count — the winnowing density
+  * guarantee), and each batch's cost is one fingerprint pass over the
+  * batch plus a state-sized union.
   */
 object WinnowStream {
 
   /** Fold one micro-batch of documents into the fingerprint index. */
   def applyBatch(batch: DataFrame, textCol: String, idCol: String,
       indexDir: String, batchId: Long, shingleLen: Int = 5,
-      window: Int = 4): Unit = {
-    val prev = DurableIters.latest(batch.sparkSession, indexDir,
-      upTo = batchId - 1).map(_._2)
-    val delta = Dedup.winnowFingerprints(batch, textCol, idCol,
-      shingleLen, window)
-    val merged = prev match {
-      case Some(p) => p.select(col("doc"), col("fp"))
-        .unionByName(delta).distinct()
-      case None => delta
+      window: Int = 4): Unit =
+    Maintained.fold(batch.sparkSession, indexDir, batchId) { prev =>
+      val delta = Dedup.winnowFingerprints(batch, textCol, idCol,
+        shingleLen, window)
+      prev.fold(delta)(_.select(col("doc"), col("fp")).unionByName(delta).distinct())
     }
-    DurableIters.save(merged, indexDir, batchId)
-    ()
-  }
-
-  /** Start the maintenance stream over a document source. */
-  def maintain(docs: DataFrame, textCol: String, idCol: String,
-      indexDir: String, checkpointDir: String, shingleLen: Int = 5,
-      window: Int = 4): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), textCol, idCol, indexDir, batchId,
-          shingleLen, window)
-      }
-      .start()
-
-  /** The latest maintained (doc, fp) index. */
-  def index(spark: SparkSession, indexDir: String): DataFrame =
-    DurableIters.latest(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"no winnowing index under $indexDir"))._2
 
   /** Screen a new batch's fingerprints against an index: candidate
     * contamination pairs (new doc, indexed doc) sharing ≥ `minShared`

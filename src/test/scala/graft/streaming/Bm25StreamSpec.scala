@@ -32,9 +32,9 @@ class Bm25StreamSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("bm25s2").toString + "/ix"
     Bm25Stream.applyBatch(docs.where(col("doc_id") <= 2), "text", "doc_id", d, 0)
     Bm25Stream.applyBatch(docs.where(col("doc_id") > 2), "text", "doc_id", d, 1)
-    val once = Bm25Stream.index(spark, d).collect().map(_.toString).sorted.toSeq
+    val once = Maintained.current(spark, d).collect().map(_.toString).sorted.toSeq
     Bm25Stream.applyBatch(docs.where(col("doc_id") > 2), "text", "doc_id", d, 1)
-    val again = Bm25Stream.index(spark, d).collect().map(_.toString).sorted.toSeq
+    val again = Maintained.current(spark, d).collect().map(_.toString).sorted.toSeq
     assert(again == once)
   }
 }

@@ -9,7 +9,7 @@ class CmsStreamSpec extends SparkSpec {
 
   private def hitters(dir: String, terms: Seq[String]) =
     Sketches.cmsEstimate(terms.toDF("t"),
-        CmsStream.counters(spark, dir), "t", width = 256, depth = 4)
+        Maintained.current(spark, dir), "t", width = 256, depth = 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("maintained counters ≡ one-shot whatever the batch packing") {
@@ -41,7 +41,7 @@ class CmsStreamSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("cms4").toString + "/s"
     val df = (1 to 5000).map(i => (i.toLong, s"t$i")).toDF("id", "t")
     CmsStream.applyBatch(df, "t", 256, 4, d, 0)
-    assert(CmsStream.counters(spark, d).count() <= 4L * 256)
+    assert(Maintained.current(spark, d).count() <= 4L * 256)
   }
 
   test("cmsBuckets mapping agrees with the cells cmsFit counts into") {

@@ -109,10 +109,10 @@ class FileStreamSpec extends SparkSpec {
     val all = (1L to 600L).map(i => s"t${i % 37}")
     all.take(200).toDF("t").write.parquet(s"$in/batch0")
     val schema = all.take(1).toDF("t").schema
-    def start() = CmsStream.maintain(
+    def start() = Maintained.sink(
       spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$in/batch*"),
-      "t", width = 256, depth = 4, state, ckpt)
+        .option("maxFilesPerTrigger", 1).parquet(s"$in/batch*"), ckpt)(
+      (b, id) => CmsStream.applyBatch(b, "t", width = 256, depth = 4, state, id))
     val q1 = start()
     try {
       q1.processAllAvailable()
@@ -123,7 +123,7 @@ class FileStreamSpec extends SparkSpec {
     all.drop(400).toDF("t").write.parquet(s"$in/batch2")
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
-    val maintained = CmsStream.counters(spark, state)
+    val maintained = Maintained.current(spark, state)
       .orderBy("d", "bucket").collect().toSeq
     val oneShot = Sketches.cmsFit(all.toDF("t"), "t", width = 256, depth = 4)
       .orderBy("d", "bucket").collect().toSeq
@@ -140,10 +140,10 @@ class FileStreamSpec extends SparkSpec {
       (i, s"alpha beta gamma delta shared tail ${i % 5} epsilon zeta eta theta"))
     docs.take(30).toDF("doc_id", "text").write.parquet(s"$in/batch0")
     val schema = docs.take(1).toDF("doc_id", "text").schema
-    val q = ChunkStoreStream.maintain(
+    val q = Maintained.sink(
       spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$in/batch*"),
-      "text", "doc_id", store, ckpt)
+        .option("maxFilesPerTrigger", 1).parquet(s"$in/batch*"), ckpt)(
+      (b, id) => ChunkStoreStream.applyBatch(b, "text", "doc_id", store, id))
     try {
       q.processAllAvailable()
       docs.drop(30).toDF("doc_id", "text").write.parquet(s"$in/batch1")
@@ -163,7 +163,7 @@ class FileStreamSpec extends SparkSpec {
     * while the query is DOWN and must fold exactly once on restart
     * (same checkpoint). Slices write single-file so order-sensitive
     * folds (markov, scd2) see their time slicing intact; `mk` builds
-    * the operator's maintain() query and closes over its own state +
+    * the operator's [[Maintained.sink]] query and closes over its own state +
     * checkpoint dirs.
     */
   private def runSlicedFileStream(tag: String,
@@ -198,7 +198,8 @@ class FileStreamSpec extends SparkSpec {
     val slices = Seq(matches.limit(3),
       matches.offset(3).limit(3), matches.offset(6))
     runSlicedFileStream("bt_fs_in", slices)(
-      BtStream.maintain(_, "winner", "loser", s"$base/state", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        BtStream.applyBatch(b, "winner", "loser", s"$base/state", id)))
     val maintained = BtStream.ratings(spark, s"$base/state", iters = 3)
       .orderBy("player").collect().toSeq
     val oneShot = graft.operators.Preference
@@ -215,7 +216,8 @@ class FileStreamSpec extends SparkSpec {
     runSlicedFileStream("kmv_fs_in", Seq(
       rows.where(col("v") < 200), rows.where(col("v") >= 200 && col("v") < 350),
       rows.where(col("v") >= 350)))(
-      KmvStream.maintain(_, "g", "v", 64, s"$base/state", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        KmvStream.applyBatch(b, "g", "v", 64, s"$base/state", id)))
     KmvStream.applyBatch(rows, "g", "v", 64, s"$base/one", 0)
     def est(d: String) = KmvStream.estimates(spark, d, "g", 64)
       .orderBy("g").collect().toSeq
@@ -233,7 +235,8 @@ class FileStreamSpec extends SparkSpec {
       events.where(col("event_id") % 100 < 2),
       events.where(col("event_id") % 100 >= 2 && col("event_id") % 100 < 4),
       events.where(col("event_id") % 100 >= 4)))(
-      MarkovStream.maintain(_, s"$base/counts", s"$base/last", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        MarkovStream.applyBatch(b, s"$base/counts", s"$base/last", id)))
     MarkovStream.applyBatch(events, s"$base/oc", s"$base/ol", 0)
     def tr(d: String) = MarkovStream.transitions(spark, d)
       .orderBy("src", "dst").collect().toSeq
@@ -249,7 +252,8 @@ class FileStreamSpec extends SparkSpec {
       arrivals.where(col("hour") <= 2),
       arrivals.where(col("hour") > 2 && col("hour") <= 4),
       arrivals.where(col("hour") > 4)))(
-      SprtStream.maintain(_, s"$base/counts", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        SprtStream.applyBatch(b, s"$base/counts", id)))
     SprtStream.applyBatch(arrivals, s"$base/one", 0)
     def cv(d: String) = SprtStream
       .curve(spark, d, p0 = 0.4, p1 = 0.5, bound = 2.94443898)
@@ -266,8 +270,8 @@ class FileStreamSpec extends SparkSpec {
     runSlicedFileStream("qsk_fs_in", Seq(
       rows.where(col("id") % 3 === 0), rows.where(col("id") % 3 === 1),
       rows.where(col("id") % 3 === 2)))(
-      QuantileStream.maintain(_, "g", "v", "id", 64, s"$base/state",
-        s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        QuantileStream.applyBatch(b, "g", "v", "id", 64, s"$base/state", id)))
     val maintained = QuantileStream
       .quantiles(spark, s"$base/state", "g", Seq(500000L, 900000L))
       .orderBy("g", "q_ppm").collect().toSeq
@@ -293,7 +297,7 @@ class FileStreamSpec extends SparkSpec {
       tagged.where(col("k") >= 7)))(
       JoinStream.maintain(_, "side", Seq("k", "va"), Seq("k", "vb"),
         Seq("k"), dirs, s"$base/ckpt"))
-    val maintained = JoinStream.view(spark, dirs._1)
+    val maintained = Maintained.current(spark, dirs._1)
       .orderBy("k", "va", "vb").collect().toSeq
     val direct = a.join(b, Seq("k"))
       .orderBy("k", "va", "vb").collect().toSeq
@@ -310,7 +314,8 @@ class FileStreamSpec extends SparkSpec {
       events.where(col("user_id") <= 3),
       events.where(col("user_id") > 3 && col("user_id") <= 6),
       events.where(col("user_id") > 6)))(
-      FunnelStream.maintain(_, s"$base/state", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        FunnelStream.applyBatch(b, s"$base/state", id)))
     FunnelStream.applyBatch(events, s"$base/one", 0)
     def rep(d: String) = FunnelStream.report(spark, d).collect().toSeq
     assert(rep(s"$base/state") == rep(s"$base/one"))
@@ -326,9 +331,10 @@ class FileStreamSpec extends SparkSpec {
       docs.where(col("doc_id") <= 10),
       docs.where(col("doc_id") > 10 && col("doc_id") <= 20),
       docs.where(col("doc_id") > 20)))(
-      WinnowStream.maintain(_, "text", "doc_id", s"$base/ix", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        WinnowStream.applyBatch(b, "text", "doc_id", s"$base/ix", id)))
     WinnowStream.applyBatch(docs, "text", "doc_id", s"$base/one", 0)
-    def ix(d: String) = WinnowStream.index(spark, d)
+    def ix(d: String) = Maintained.current(spark, d)
       .orderBy("doc", "fp").collect().toSeq
     assert(ix(s"$base/ix") == ix(s"$base/one"))
   }
@@ -344,8 +350,9 @@ class FileStreamSpec extends SparkSpec {
       changes.where(col("ts_us") <= 1100L),
       changes.where(col("ts_us") === 1200L),
       changes.where(col("ts_us") === 1300L)))(
-      ScdStream.maintain(_, s"$base/hist", s"$base/ckpt",
-        "user_id", "ts_us", "event_id", "state"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        ScdStream.applyBatch(b, s"$base/hist", id,
+          "user_id", "ts_us", "event_id", "state")))
     ScdStream.applyBatch(changes, s"$base/one", 0,
       "user_id", "ts_us", "event_id", "state")
     def hist(d: String) = graft.operators.DurableIters.latest(spark, d).get._2
@@ -368,7 +375,8 @@ class FileStreamSpec extends SparkSpec {
       docs.where(col("doc_id") <= 2),
       docs.where(col("doc_id") > 2 && col("doc_id") <= 4),
       docs.where(col("doc_id") > 4)))(
-      Bm25Stream.maintain(_, "text", "doc_id", s"$base/ix", s"$base/ckpt"))
+      Maintained.sink(_, s"$base/ckpt")((b, id) =>
+        Bm25Stream.applyBatch(b, "text", "doc_id", s"$base/ix", id)))
     val maintained = Bm25Stream.topK(spark, s"$base/ix", queries, k = 3)
       .collect().map(_.toString).sorted.toSeq
     val oneShot = Retrieval.bm25TopK(docs, queries, k = 3)

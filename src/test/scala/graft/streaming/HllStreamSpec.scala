@@ -53,10 +53,10 @@ class HllStreamSpec extends SparkSpec {
     // maxFilesPerTrigger=1 forces MULTIPLE micro-batches per
     // processAllAvailable — the fold must be trigger-agnostic, not
     // merely replay-from-batch-list-agnostic
-    def start() = HllStream.maintain(
+    def start() = Maintained.sink(
       spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$in/batch*"),
-      "k", "g", p = 4, state, ckpt)
+        .option("maxFilesPerTrigger", 1).parquet(s"$in/batch*"), ckpt)(
+      (b, id) => HllStream.applyBatch(b, "k", "g", p = 4, state, id))
     val q1 = start()
     try {
       q1.processAllAvailable()

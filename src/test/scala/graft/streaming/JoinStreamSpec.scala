@@ -23,7 +23,7 @@ class JoinStreamSpec extends SparkSpec {
       Seq("k"), d, 0)
     JoinStream.applyBatch(a.where(col("k") > 2), b.where(col("k") =!= 1),
       Seq("k"), d, 1)
-    val got = JoinStream.view(spark, d._1).collect().map(_.toString).sorted.toSeq
+    val got = Maintained.current(spark, d._1).collect().map(_.toString).sorted.toSeq
     assert(got == oneShot)
   }
 
@@ -35,11 +35,11 @@ class JoinStreamSpec extends SparkSpec {
       Seq("k"), d, 0)
     JoinStream.applyBatch(a.where(col("k") > 10), b.where(col("k") > 10),
       Seq("k"), d, 1)
-    val once = JoinStream.view(spark, d._1).count()
+    val once = Maintained.current(spark, d._1).count()
     // replay batch 1 (crash before commit acknowledged): same state
     JoinStream.applyBatch(a.where(col("k") > 10), b.where(col("k") > 10),
       Seq("k"), d, 1)
-    assert(JoinStream.view(spark, d._1).count() == once)
+    assert(Maintained.current(spark, d._1).count() == once)
     assert(once == 20L)
   }
 }

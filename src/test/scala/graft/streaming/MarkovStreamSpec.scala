@@ -49,7 +49,8 @@ class MarkovStreamSpec extends SparkSpec {
     val lastDir = Files.createTempDirectory("markov-last").toString
     val ckptDir = Files.createTempDirectory("markov-ckpt").toString
     val mem = MemoryStream[MkEv]
-    val q = MarkovStream.maintain(mem.toDF(), countsDir, lastDir, ckptDir)
+    val q = Maintained.sink(mem.toDF(), ckptDir)((b, id) =>
+      MarkovStream.applyBatch(b, countsDir, lastDir, id))
     try {
       mem.addData(rows(0, 50): _*)
       q.processAllAvailable()

@@ -32,7 +32,8 @@ class MomentsStreamSpec extends SparkSpec {
     val stateDir = Files.createTempDirectory("moments-state").toString
     val ckptDir = Files.createTempDirectory("moments-ckpt").toString
     val mem = MemoryStream[Obs]
-    val q = MomentsStream.maintain(mem.toDF(), stateDir, ckptDir, cols)
+    val q = Maintained.sink(mem.toDF(), ckptDir)((b, id) =>
+      MomentsStream.applyBatch(b, stateDir, id, cols))
     try {
       mem.addData(rows(0, 120): _*)
       q.processAllAvailable()

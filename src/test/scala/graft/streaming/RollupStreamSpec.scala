@@ -30,7 +30,8 @@ class RollupStreamSpec extends SparkSpec {
     val stateDir = Files.createTempDirectory("rollup-state").toString
     val ckptDir = Files.createTempDirectory("rollup-ckpt").toString
     val mem = MemoryStream[Metric]
-    val q = RollupStream.maintain(mem.toDF(), stateDir, ckptDir, keys, "v")
+    val q = Maintained.sink(mem.toDF(), ckptDir)((b, id) =>
+      RollupStream.applyBatch(b, stateDir, id, keys, "v"))
     try {
       mem.addData(rows(0, 150): _*)
       q.processAllAvailable()

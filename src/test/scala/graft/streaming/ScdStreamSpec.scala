@@ -25,7 +25,8 @@ class ScdStreamSpec extends SparkSpec {
     val histDir = Files.createTempDirectory("scd-hist").toString
     val ckptDir = Files.createTempDirectory("scd-ckpt").toString
     val mem = MemoryStream[Change]
-    val q = ScdStream.maintain(mem.toDF(), histDir, ckptDir, "k", "ts", "tie", "st")
+    val q = Maintained.sink(mem.toDF(), ckptDir)((b, id) =>
+      ScdStream.applyBatch(b, histDir, id, "k", "ts", "tie", "st"))
     try {
       mem.addData(changes(0, 40): _*)
       q.processAllAvailable()

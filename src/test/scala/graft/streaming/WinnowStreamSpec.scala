@@ -17,7 +17,7 @@ class WinnowStreamSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   private def digest(dir: String) =
-    WinnowStream.index(spark, dir)
+    Maintained.current(spark, dir)
       .groupBy(col("doc")).agg(count(lit(1)).as("n"),
         min(col("fp")).as("mn"), expr("bit_xor(fp)").as("x"))
       .collect()
