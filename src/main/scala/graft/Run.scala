@@ -25,6 +25,12 @@ import graft.car._
   * (see [[graft.car.Lifecycles]]); so do the artifact writes of
   * `preprocess` (five parquet tables and `dictionary.json`) and of
   * `second` (two parquet tables). No flag controls this.
+  *
+  * Each invocation owns one [[graft.car.SharedFrames]] scope: the frames
+  * a stage reads more than once are persisted in it (`first`'s repaired
+  * input here; the rest inside [[graft.car.Lifecycles]], which names
+  * them), and it is released in a `finally` after the artifact writes,
+  * the last consumer, before the session stops.
   */
 object Run {
 
@@ -62,11 +68,19 @@ object Run {
         flag("shuffle-partitions", "32").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val shared = new SharedFrames
+    // --embeddings <preprocess result-dir>: consume the pretrained KG
+    // embeddings like first.py / second.py load embedding.npz
+    def pretrained = flags.get("embeddings").map { d =>
+      Lifecycles.embeddingFeatures(
+        EmbeddingStore.load(spark, s"$d/embedding/entity"),
+        spark.read.parquet(s"$d/entity_vocab"))
+    }
 
     try {
       cmd match {
         case "preprocess" =>
-          val out = Lifecycles.preprocess(spark, dataPath,
+          val out = Lifecycles.preprocess(spark, shared, dataPath,
             seed = flag("seed", "42").toLong,
             embeddingCfg = EmbeddingTrainer.Config(
               dim = flag("embedding-dim", "16").toInt,
@@ -92,17 +106,12 @@ object Run {
               else ""))
 
         case "first" =>
-          val repaired = Repair.repair(CarSources.readCarTest(spark, dataPath))
+          // the split reads the repaired input once per half
+          val repaired = shared.keep(
+            Repair.repair(CarSources.readCarTest(spark, dataPath)))
           val (train, dev) = Splits.shuffledSplit(repaired,
             flag("percentage", "0.7").toDouble, flag("seed", "42").toLong)
-          // --embeddings <preprocess result-dir>: consume the pretrained
-          // KG embeddings like first.py loads embedding.npz
-          val pretrained = flags.get("embeddings").map { d =>
-            Lifecycles.embeddingFeatures(
-              EmbeddingStore.load(spark, s"$d/embedding/entity"),
-              spark.read.parquet(s"$d/entity_vocab"))
-          }
-          val (submission, report) = Lifecycles.first(spark, train, dev,
+          val (submission, report) = Lifecycles.first(spark, shared, train, dev,
             pretrained = pretrained)
           CarSources.writeSubmission(submission, s"$resultDir/submission")
           report.show(truncate = false)
@@ -113,13 +122,8 @@ object Run {
             sys.error("--txn <attachment-4-style TSV> is required for second"))
           val car = Repair.repair(CarSources.readCarTrain(spark, dataPath))
           val txn = CarSources.readStoreTxn(spark, txnPath)
-          val pretrained2 = flags.get("embeddings").map { d =>
-            Lifecycles.embeddingFeatures(
-              EmbeddingStore.load(spark, s"$d/embedding/entity"),
-              spark.read.parquet(s"$d/entity_vocab"))
-          }
           val (dealScored, datePrice) =
-            Lifecycles.second(spark, car, txn, pretrained = pretrained2)
+            Lifecycles.second(spark, shared, car, txn, pretrained = pretrained)
           Concurrently.all(spark)(
             () => dealScored.write.mode("overwrite").parquet(s"$resultDir/deal_scored"),
             () => datePrice.write.mode("overwrite").parquet(s"$resultDir/date_price"))
@@ -128,6 +132,6 @@ object Run {
         case other =>
           sys.error(s"unknown command '$other' (preprocess|first|second)")
       }
-    } finally spark.stop()
+    } finally try shared.release() finally spark.stop()
   }
 }

@@ -42,6 +42,8 @@ object EmbeddingTrainer {
     *   true-tails) — the sort dominates and is paid once per eval
     *   regardless — but bounding the query side still caps the filter
     *   join and keeps eval cost independent of the valid-split size.
+    *   The eval broadcasts the query side, so with 0 the whole valid
+    *   split is broadcast once per eval.
     *   The reference evaluates its full (small, single-node) valid set —
     *   same protocol, bounded.
     */

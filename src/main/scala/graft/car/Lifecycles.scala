@@ -20,6 +20,24 @@ import graft.metrics.Scores
   * fits. No setting controls this. The cost is memory: during
   * [[second]] the three LR heads' cached instances and the GBTs' binned
   * points are cached at the same time instead of one after another.
+  *
+  * Each lifecycle persists, through the caller's [[SharedFrames]], every
+  * frame that two or more of its consumers read, so no fit, vocabulary
+  * or write re-derives it from the CSV:
+  *  - [[preprocess]]: `train` and `dev` (the split; read by the
+  *    dictionary, the triplet builder and the writes) and `triplets`
+  *    (read by both dense-id vocabularies, [[Triplets.encode]] and the
+  *    write);
+  *  - [[first]]: the encoded training frame (read by the label
+  *    statistics, the fit and the training report) and the pretrained
+  *    features;
+  *  - [[second]]: `labeled` and `sold` (read by every MLlib fit of the
+  *    classifier and of the four heads, and by the scoring) and the
+  *    pretrained features.
+  * The returned frames read those caches, so the caller releases the
+  * scope only after its last read of them (`graft.Run`: after the
+  * artifact writes). Results do not change: each cache holds the rows
+  * its consumers would have recomputed.
   */
 object Lifecycles {
 
@@ -39,7 +57,7 @@ object Lifecycles {
     * `embedding.npz`, preprocess.py:75-85 — is written through
     * [[EmbeddingStore.save]] when `embeddingPath` is given).
     */
-  def preprocess(spark: SparkSession, carPath: String,
+  def preprocess(spark: SparkSession, shared: SharedFrames, carPath: String,
       discreteCols: Seq[String] = Seq("brand", "serial", "model", "color",
         "cityId", "country", "oiltype"),
       seed: Long = 42L,
@@ -51,10 +69,13 @@ object Lifecycles {
       triplePercentage: Double = 0.7): PreprocessOut = {
     val raw = CarSources.readCarTest(spark, carPath)
     val repaired = Repair.repair(raw)
-    val (train, dev) = Splits.shuffledSplit(repaired, percentage, seed)
-    val triplets = Triplets.fromRows(train, discreteCols)
+    val (train, dev) = {
+      val (t, d) = Splits.shuffledSplit(repaired, percentage, seed)
+      (shared.keep(t), shared.keep(d))
+    }
+    val triplets = shared.keep(Triplets.fromRows(train, discreteCols)
       .unionByName(Triplets.fromRows(dev, discreteCols, upperTriangleOnly = true))
-      .dropDuplicates("head_entity", "relation", "tail_entity")
+      .dropDuplicates("head_entity", "relation", "tail_entity"))
     // The dictionary and the dense-id vocabularies over the triplet
     // strings (utils.py:144-153) are independent, so they are built side
     // by side; the distributed analogue of the RGCN pretraining loop
@@ -144,9 +165,11 @@ object Lifecycles {
     * never saw fall back to 0 (torch rows absent from the dictionary
     * would not be looked up either).
     */
-  def first(spark: SparkSession, trainDf: DataFrame, scoreDf: DataFrame,
+  def first(spark: SparkSession, shared: SharedFrames,
+      trainDf: DataFrame, scoreDf: DataFrame,
       labelCol: String = "newprice",
       pretrained: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val features = pretrained.map(shared.keep)
     def featurize(df: DataFrame): DataFrame =
       CarFeatures.withDateComponents(
         CarFeatures.withDimensionFeatures(df), "tradeTime", "trade")
@@ -154,8 +177,8 @@ object Lifecycles {
     val vocab = Vocab.build(Seq(trainDf, scoreDf), vocabCols)
     def encode(df: DataFrame): DataFrame =
       withEmbeddingFeatures(
-        Vocab.encode(featurize(df), vocab, vocabCols), pretrained, vocabCols)
-    val train0 = encode(trainDf)
+        Vocab.encode(featurize(df), vocab, vocabCols), features, vocabCols)
+    val train0 = shared.keep(encode(trainDf))
     // normalize the label like the reference normalizes price (A2), and
     // invert predictions with the SAME stats (A4)
     val stats = Normalize.fit(train0, Seq(labelCol), Normalize.ZScore)
@@ -178,22 +201,24 @@ object Lifecycles {
     * `pretrained` injects KG-pretrained entity features like the
     * reference's second.py:40-44 `ent_embed.from_pretrained`.
     */
-  def second(spark: SparkSession, carDf: DataFrame, txnDf: DataFrame,
+  def second(spark: SparkSession, shared: SharedFrames,
+      carDf: DataFrame, txnDf: DataFrame,
       pretrained: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val features = pretrained.map(shared.keep)
     def featurize(df: DataFrame): DataFrame =
       withEmbeddingFeatures(
         CarFeatures.withDateComponents(
           CarFeatures.withDimensionFeatures(df), "tradeTime", "trade"),
-        pretrained, Seq("brand", "color", "oiltype"))
-    val labeled = featurize(CarJoins.carWithTransactions(carDf, txnDf))
+        features, Seq("brand", "color", "oiltype"))
+    val labeled = shared.keep(featurize(CarJoins.carWithTransactions(carDf, txnDf)))
     require(!labeled.isEmpty,
       "car ⋈ transaction join is empty — the transaction table's carids " +
         "must reference the supplied car table (the reference's 附件4 keys " +
         "into 附件1, which its repo does not ship; see LifecyclesSpec for " +
         "the facsimile pattern)")
-    val sold = CarFeatures.withDateComponents(
+    val sold = shared.keep(CarFeatures.withDateComponents(
       featurize(CarFeatures.withFinalPrice(CarJoins.soldCars(carDf, txnDf))),
-      "withdrawDate", "deal")
+      "withdrawDate", "deal"))
     val (clf, (ym, mm, dm, pm)) = Concurrently.both(spark)(
       Pipelines.dealClassifier(labeled), Pipelines.dealDateAndPrice(sold))
     val dealScored = clf.transform(labeled)

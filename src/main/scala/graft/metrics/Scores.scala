@@ -171,7 +171,23 @@ object Scores {
     * defensively — duplicate filter triplets must not double-subtract.
     *
     * Returns the same 1-row schema as [[filteredMrr]], materialized
-    * eagerly (the internal rank table is freed before returning).
+    * eagerly (the internal rank table is freed before returning). The
+    * mean reciprocal rank is summed in DECIMAL, so it does not depend on
+    * the order the plan delivers the queries in.
+    *
+    * Plan: `valid` is the query set, an evaluation sample (the trainer
+    * passes at most `evalSample` triplets), so every join it takes part
+    * in, and the per-query correction, is planned as a broadcast up
+    * front. Left to AQE those were sort-merge joins it turned into
+    * broadcasts once a shuffle stage had run, and whether the other
+    * side's stage had already been submitted by then varied from run to
+    * run, so identical runs launched different numbers of jobs. One
+    * join stays sort-merge: the asked pairs' true tails against the
+    * entity ranks, since neither side is bounded by the sample (the
+    * fan-out of a (head, relation) pair and the entity count grow with
+    * the graph). AQE may still turn it into a broadcast at run time;
+    * over five runs on the car benchmark's seed-11 input its job count
+    * did not vary, but a job-count gate must tolerate ±1 there.
     */
   def filteredMrrAdditive(valid: DataFrame, allTrue: DataFrame,
       entitySums: DataFrame, relationSums: DataFrame,
@@ -180,7 +196,7 @@ object Scores {
     val perQuery = additiveRanksOver(ranked, valid, allTrue, relationSums)
     val hitAggs = ks.map(k => avg((col("rnk") <= k).cast("double")).as(s"hits$k"))
     val out = perQuery
-      .agg(avg(lit(1.0) / col("rnk")).as("mrr"),
+      .agg(avg(lit(BigDecimal(1)) / col("rnk")).cast("double").as("mrr"),
         hitAggs :+ count(lit(1)).as("n_queries"): _*)
       .localCheckpoint(true)
     org.apache.spark.sql.graftshim.CheckpointShim.freeLocalCheckpoint(ranked)
@@ -551,29 +567,35 @@ object Scores {
     val dupW = Window
       .partitionBy(col("head_id"), col("relation_id"), col("target_id"))
       .orderBy(col("target_id"))
-    val queries = valid.select(
+    val asked = broadcast(valid.select(
         col("head_id"), col("relation_id"), col("tail_id").as("target_id"))
       .withColumn("query_id", xxhash64(col("head_id"), col("relation_id"),
-        col("target_id"), row_number().over(dupW)))
-      // presence gates mirror the inner joins of the crossJoin form
-      .join(ranked.select(col("entity_id").as("head_id")),
-        Seq("head_id"), "left_semi")
-      .join(relationSums.select(col("relation_id")),
-        Seq("relation_id"), "left_semi")
-      .join(ranked.select(col("entity_id").as("target_id"),
-        (col("grank0") + 1).as("grank")), Seq("target_id"))
+        col("target_id"), row_number().over(dupW))))
+    // presence gates mirror the inner joins of the crossJoin form; entity
+    // ids are unique in `ranked`, so the inner join on the head keeps each
+    // query once, as a semi join would, while letting the query side be
+    // the broadcast one (a left semi join can only build its right side)
+    val known = broadcast(asked
+      .join(ranked.select(col("entity_id").as("head_id")), Seq("head_id"))
+      .join(broadcast(relationSums.select(col("relation_id"))),
+        Seq("relation_id"), "left_semi"))
+    val queries = broadcast(known.join(
+      ranked.select(col("entity_id").as("target_id"), (col("grank0") + 1).as("grank")),
+      Seq("target_id")))
     // filtered-protocol correction: OTHER true tails of (h, r) ranked
-    // strictly ahead of the target would each shift it down one place
-    val trueRanked = allTrue
-      .select(col("head_id"), col("relation_id"), col("tail_id")).distinct()
+    // strictly ahead of the target would each shift it down one place.
+    // Only the true triplets of the asked (h, r) pairs are ranked, and
+    // tails are counted distinct, since `allTrue` may repeat a triplet.
+    val corr = allTrue
+      .select(col("head_id"), col("relation_id"), col("tail_id"))
+      .join(queries, Seq("head_id", "relation_id"))
+      .where(col("tail_id") =!= col("target_id"))
       .join(ranked.select(col("entity_id").as("tail_id"),
         (col("grank0") + 1).as("true_grank")), Seq("tail_id"))
-    val corr = queries
-      .join(trueRanked, Seq("head_id", "relation_id"))
-      .where(col("tail_id") =!= col("target_id")
-        && col("true_grank") < col("grank"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_better_true"))
-    queries.join(corr, Seq("query_id"), "left")
+      .where(col("true_grank") < col("grank"))
+      .groupBy(col("query_id"))
+      .agg(countDistinct(col("tail_id")).as("n_better_true"))
+    queries.join(broadcast(corr), Seq("query_id"), "left")
       .select(col("query_id"), col("head_id"), col("relation_id"),
         col("target_id"),
         (col("grank") - coalesce(col("n_better_true"), lit(0L))).as("rnk"))

@@ -50,6 +50,32 @@ class PlanSpec extends SparkSpec {
     assert(badW.isEmpty)
   }
 
+  test("additive MRR eval plans every join of the query side as a broadcast up front") {
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import spark.implicits._
+    // with size-based broadcasting off, only the planned broadcasts stay:
+    // the query side's three gates (planned twice, under the correction
+    // and under the result), the true triplets of the asked pairs and
+    // the correction. The one sort-merge join left is the true tails
+    // against the entity ranks, neither of which the query count bounds;
+    // AQE may still turn that one into a broadcast at run time
+    val eSums = (0L until 20L).map(i => (i, i * 0.5)).toDF("entity_id", "esum")
+    val rSums = Seq((0L, 0.1), (1L, 0.2)).toDF("relation_id", "rsum")
+    val valid = Seq((0L, 0L, 3L), (1L, 1L, 5L)).toDF("head_id", "relation_id", "tail_id")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val plan = graft.metrics.Scores.additiveRanks(valid, valid, eSums, rSums)
+        .queryExecution.sparkPlan
+      val joins = plan.collectWithSubqueries {
+        case _: BroadcastHashJoinExec => "broadcast"
+        case _: SortMergeJoinExec => "sort-merge"
+      }
+      assert(joins.count(_ == "broadcast") == 8 && joins.count(_ == "sort-merge") == 1,
+        s"$joins in\n$plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("knnJoinIvfPq candidate stage plans a hash join on the cell key, never a nested-loop product") {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.functions.col

@@ -1,6 +1,8 @@
 package graft.car
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CacheShim.cachedEntries
+import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 
 /** §3 lifecycles end-to-end on the REAL reference data (附件2 drives both
@@ -14,62 +16,76 @@ class LifecyclesSpec extends SparkSpec {
   private val txnPath = "/root/reference/data/附件4：门店交易训练数据.txt"
   private def exists(p: String) = new java.io.File(p).isFile
 
+  /** Runs `f` in a fresh [[SharedFrames]] scope and releases it after. */
+  private def withShared[A](f: SharedFrames => A): A = {
+    val shared = new SharedFrames
+    try f(shared) finally shared.release()
+  }
+
+  /** `n` 附件2-style lines: the fixture's 附件1 lines without the price. */
+  private def testLines(n: Int): Seq[String] =
+    (1 to n).map(i => CarFixtures.trainLine(i.toLong, 5.0 + i * 0.25,
+      withNulls = i % 5 == 0).split("\t", -1).init.mkString("\t"))
+
   test("preprocess lifecycle: repair → split → vocab → triplets on 附件2") {
     assume(exists(testPath))
-    val out = Lifecycles.preprocess(spark, testPath)
-    assert(out.repaired.count() == 5000)
-    assert(out.train.count() + out.dev.count() == 5000)
-    assert(out.vocab.count() > 0)
-    assert(out.vocab.select("col_name").distinct().count() == 7)
-    val t = out.triplets
-    assert(t.count() > 0)
-    assert(t.select("relation").distinct().count() <= 7)
-    // triplet set is deduplicated
-    assert(t.count() == t.dropDuplicates("head_entity", "relation", "tail_entity").count())
+    withShared { shared =>
+      val out = Lifecycles.preprocess(spark, shared, testPath)
+      assert(out.repaired.count() == 5000)
+      assert(out.train.count() + out.dev.count() == 5000)
+      assert(out.vocab.count() > 0)
+      assert(out.vocab.select("col_name").distinct().count() == 7)
+      val t = out.triplets
+      assert(t.count() > 0)
+      assert(t.select("relation").distinct().count() <= 7)
+      // triplet set is deduplicated
+      assert(t.count() == t.dropDuplicates("head_entity", "relation", "tail_entity").count())
+    }
   }
 
   test("preprocess trains KG embeddings: loss falls, filtered MRR beats random") {
     assume(exists(testPath))
     import graft.metrics.Scores
-    val out = Lifecycles.preprocess(spark, testPath)
-    assert(out.epochLoss.nonEmpty && out.epochLoss.last < out.epochLoss.head,
-      s"training loss did not fall: ${out.epochLoss}")
-    // the default pipeline now validates every epoch on the held-out
-    // triplet split and ships the best epoch's embeddings (ADVICE r3)
-    assert(out.mrrTrace.map(_._1) == (1 to out.epochLoss.length),
-      s"expected an MRR evaluation per epoch, got ${out.mrrTrace}")
-    assert(out.bestEpoch == out.mrrTrace.maxBy(_._2)._1)
-    assert(out.entityEmb.count() == out.entityVocab.count())
-    val allTrue = out.encodedTriplets.localCheckpoint(true)
-    val valid = allTrue.limit(50).localCheckpoint(true)
-    def mrr(ent: org.apache.spark.sql.DataFrame,
-        rel: org.apache.spark.sql.DataFrame): Double = {
-      val scores = EmbeddingTrainer.scoreAllCandidates(valid, ent, rel)
-      Scores.filteredMrr(valid, allTrue, scores).head().getAs[Double]("mrr")
+    withShared { shared =>
+      val out = Lifecycles.preprocess(spark, shared, testPath)
+      assert(out.epochLoss.nonEmpty && out.epochLoss.last < out.epochLoss.head,
+        s"training loss did not fall: ${out.epochLoss}")
+      // the default pipeline now validates every epoch on the held-out
+      // triplet split and ships the best epoch's embeddings (ADVICE r3)
+      assert(out.mrrTrace.map(_._1) == (1 to out.epochLoss.length),
+        s"expected an MRR evaluation per epoch, got ${out.mrrTrace}")
+      assert(out.bestEpoch == out.mrrTrace.maxBy(_._2)._1)
+      assert(out.entityEmb.count() == out.entityVocab.count())
+      val allTrue = out.encodedTriplets.localCheckpoint(true)
+      val valid = allTrue.limit(50).localCheckpoint(true)
+      def mrr(ent: org.apache.spark.sql.DataFrame,
+          rel: org.apache.spark.sql.DataFrame): Double = {
+        val scores = EmbeddingTrainer.scoreAllCandidates(valid, ent, rel)
+        Scores.filteredMrr(valid, allTrue, scores).head().getAs[Double]("mrr")
+      }
+      val nE = out.entityVocab.count(); val nR = out.relationVocab.count()
+      val randomEnt = EmbeddingTrainer.assemble(
+        EmbeddingTrainer.initFlat(spark, nE, 8, 42L), "entity_id")
+      val randomRel = EmbeddingTrainer.assemble(
+        EmbeddingTrainer.initFlat(spark, nR, 8, 43L), "relation_id")
+      val trained = mrr(out.entityEmb, out.relationEmb)
+      val baseline = mrr(randomEnt, randomRel)
+      assert(trained > baseline,
+        s"trained MRR $trained not above random baseline $baseline")
     }
-    val nE = out.entityVocab.count(); val nR = out.relationVocab.count()
-    val randomEnt = EmbeddingTrainer.assemble(
-      EmbeddingTrainer.initFlat(spark, nE, 8, 42L), "entity_id")
-    val randomRel = EmbeddingTrainer.assemble(
-      EmbeddingTrainer.initFlat(spark, nR, 8, 43L), "relation_id")
-    val trained = mrr(out.entityEmb, out.relationEmb)
-    val baseline = mrr(randomEnt, randomRel)
-    assert(trained > baseline,
-      s"trained MRR $trained not above random baseline $baseline")
   }
 
   test("preprocess's concurrent vocabularies equal one-at-a-time builds") {
-    // a 附件2-style file: the fixture's 附件1 lines without the price field
-    val lines = (1 to 60).map(i => CarFixtures.trainLine(i.toLong, 5.0 + i * 0.25,
-      withNulls = i % 5 == 0).split("\t", -1).init.mkString("\t"))
-    val out = Lifecycles.preprocess(spark, CarFixtures.writeTsv(lines),
-      embeddingCfg = EmbeddingTrainer.Config(dim = 4, epochs = 1))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().toSeq
-    val cols = Seq("brand", "serial", "model", "color", "cityId", "country", "oiltype")
-    assert(rows(out.vocab) == rows(Vocab.build(Seq(out.train, out.dev), cols)))
-    assert(rows(out.entityVocab) == rows(Lifecycles.entityVocabOf(out.triplets)))
-    assert(rows(out.relationVocab) == rows(Lifecycles.relationVocabOf(out.triplets)))
-    assert(out.entityVocab.count() > 0 && out.relationVocab.count() > 0)
+    withShared { shared =>
+      val out = Lifecycles.preprocess(spark, shared, CarFixtures.writeTsv(testLines(60)),
+        embeddingCfg = EmbeddingTrainer.Config(dim = 4, epochs = 1))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().toSeq
+      val cols = Seq("brand", "serial", "model", "color", "cityId", "country", "oiltype")
+      assert(rows(out.vocab) == rows(Vocab.build(Seq(out.train, out.dev), cols)))
+      assert(rows(out.entityVocab) == rows(Lifecycles.entityVocabOf(out.triplets)))
+      assert(rows(out.relationVocab) == rows(Lifecycles.relationVocabOf(out.triplets)))
+      assert(out.entityVocab.count() > 0 && out.relationVocab.count() > 0)
+    }
   }
 
   test("first lifecycle: train on 70% of 附件2, score the rest, emit submission") {
@@ -84,13 +100,15 @@ class LifecyclesSpec extends SparkSpec {
     val pretrained = brands.zipWithIndex
       .map { case (b, i) => (s"brand:$b", 0.5 + i) }.toSeq
       .toDF("entity", "emb_feat")
-    val (submission, report) =
-      Lifecycles.first(spark, train, dev, pretrained = Some(pretrained))
-    assert(submission.columns.toSeq == Seq("carid", "price"))
-    assert(submission.count() == dev.count())
-    assert(submission.where(col("price").isNull || isnan(col("price"))).count() == 0)
-    val r = report.head()
-    assert(r.getAs[Long]("n") == train.count())
+    withShared { shared =>
+      val (submission, report) =
+        Lifecycles.first(spark, shared, train, dev, pretrained = Some(pretrained))
+      assert(submission.columns.toSeq == Seq("carid", "price"))
+      assert(submission.count() == dev.count())
+      assert(submission.where(col("price").isNull || isnan(col("price"))).count() == 0)
+      val r = report.head()
+      assert(r.getAs[Long]("n") == train.count())
+    }
   }
 
   test("embeddingFeatures: one scalar per entity string, EmbFeat reaches featureColumns") {
@@ -117,11 +135,50 @@ class LifecyclesSpec extends SparkSpec {
     }
     val car = Repair.repair(
       CarSources.readCarTrain(spark, CarFixtures.writeTsv(lines.toSeq)))
-    val (dealScored, datePrice) = Lifecycles.second(spark, car, txn)
-    assert(dealScored.count() > 0)
-    assert(dealScored.select("deal_pred").distinct().count() <= 2)
-    assert(datePrice.count() > 0)
-    assert(datePrice.where(col("dealPricePred").isNull).count() == 0)
+    withShared { shared =>
+      val (dealScored, datePrice) = Lifecycles.second(spark, shared, car, txn)
+      assert(dealScored.count() > 0)
+      assert(dealScored.select("deal_pred").distinct().count() <= 2)
+      assert(datePrice.count() > 0)
+      assert(datePrice.where(col("dealPricePred").isNull).count() == 0)
+    }
+  }
+
+  test("the three lifecycles release every frame they persist, and their outputs keep their rows") {
+    val n = 60
+    // 附件1 lines for second, and one 附件4 line per car (every third one
+    // unsold) plus one that keys into no car
+    val carLines = (1 to n).map(i =>
+      CarFixtures.trainLine(i.toLong, 5.0 + i * 0.2, withNulls = i % 7 == 0))
+    val txnLines = (1 to n).map(i => CarFixtures.txnLine(i.toLong, sold = i % 3 != 0,
+      json = if (i % 2 == 0) s"""{"2021-04-05": "${8 + i % 5}"}""" else "{}")) :+
+      CarFixtures.txnLine(9999, sold = true)
+    val before = cachedEntries(spark)
+    val shared = new SharedFrames
+    val pre = Lifecycles.preprocess(spark, shared, CarFixtures.writeTsv(testLines(n)),
+      embeddingCfg = EmbeddingTrainer.Config(dim = 4, epochs = 1))
+    val pretrained = Some(Lifecycles.embeddingFeatures(pre))
+    val (submission, _) =
+      Lifecycles.first(spark, shared, pre.train, pre.dev, pretrained = pretrained)
+    val (dealScored, datePrice) = Lifecycles.second(spark, shared,
+      Repair.repair(CarSources.readCarTrain(spark, CarFixtures.writeTsv(carLines))),
+      CarSources.readStoreTxn(spark, CarFixtures.writeTsv(txnLines)), pretrained)
+    val outputs = Seq(pre.train, pre.dev, pre.triplets, submission, dealScored, datePrice)
+    val rows = outputs.map(_.count())
+    // preprocess: train, dev, triplets; first: the pretrained features
+    // and the encoded training frame; second: labeled and sold (the
+    // features are the frame first already kept)
+    assert(cachedEntries(spark) - before == 7)
+    assert(Seq(pre.train, pre.dev, pre.triplets).forall(_.storageLevel != StorageLevel.NONE))
+    shared.release()
+    assert(cachedEntries(spark) == before,
+      "a frame the lifecycles persisted is still cached after release()")
+    assert(Seq(pre.train, pre.dev, pre.triplets).forall(_.storageLevel == StorageLevel.NONE))
+    // the outputs recompute from their lineage to the same row counts
+    assert(outputs.map(_.count()) == rows)
+    val Seq(train, dev, triplets, sub, deals, dates) = rows
+    assert(train + dev == n && triplets > 0 && sub == dev)
+    assert(deals == n && dates == (1 to n).count(_ % 3 != 0))
   }
 
   test("golden submission TSV: carid \\t price, no header, one row per car (evaluate.py:69-95)") {
