@@ -10,18 +10,11 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Explain <sfDir> [name1,name2,...]")
-    val sfDir = args(0)
-    val names =
-      if (args.length > 1) args(1).split(',').toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.builder(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      println(s"\n===== $n =====")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    QueryLoop(args.drop(1).headOption.toSeq.flatMap(_.split(',')), args(0)) { loop =>
+      for ((name, frame) <- loop.queries) {
+        println(s"\n===== $name =====")
+        for (e <- loop.run(frame().explain("formatted")).error(500)) println(s"failed: $e")
+      }
     }
-    spark.stop()
   }
 }

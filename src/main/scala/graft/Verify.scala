@@ -6,47 +6,28 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.drop(2).headOption.toSeq.flatMap(_.split(","))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    QueryLoop(only, sfDir) { loop =>
+      import loop.spark.implicits._
+      for ((name, frame) <- loop.queries) {
+        val outcome = loop.run(frame().coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         // A throwing query must still surface in the correctness gate
         // as a FAILING row, never as silence (round 10: a broken
         // sketch_union_rollup simply had no row). The sentinel parquet
         // can't match any oracle schema, so the driver reports a
         // schema/row mismatch with the error text in plain sight.
-        try {
-          import spark.implicits._
-          Seq(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}")
-            .toDF("__verify_error")
+        for (e <- outcome.error(500)) {
+          System.err.println(s"[verify] $name failed: $e")
+          try Seq(e).toDF("__verify_error")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
-          System.err.println(s"[verify] $name sentinel write failed: ${e2.getMessage}")
+          catch { case e2: Throwable =>
+            System.err.println(s"[verify] $name sentinel write failed: ${e2.getMessage}")
+          }
         }
       }
-      // queries are independent — release per-query persisted blocks
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Some oracles audit an engine artifact the replay can't derive in
     // SQL (a learned BPE merge table, an ANN candidate set): they read
     // the SIBLING query's dumped parquet via read_parquet. The dump dir
@@ -54,10 +35,9 @@ object Verify {
     // placeholder and get the absolute path substituted at dump time —
     // the checker runs against the same outDir it compares results from.
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__VERIFY_OUT__", outAbs))}" }
-      .mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${QueryLoop.jsonString(k)}: ${QueryLoop.jsonString(v.replace("__VERIFY_OUT__", outAbs))}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -4,11 +4,11 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.graftshim.ListenerShim
-import graft.{Bench, GraftSession, SparkEntry}
+import graft.QueryLoop
 
-/** Per-query diagnostic: runs each named query cold, then warm, on
-  * Bench's session after Bench's warm-up, and prints one line per stored
-  * fixture that warm-up installs, then one line per run:
+/** Per-query diagnostic: runs each named query cold, then warm, in a
+  * [[QueryLoop]], and prints one line per stored fixture that the loop's
+  * warm-up installs, then one line per run:
   *
   * {{{
   * [probe] fixture storedKnnGraph build=3.412
@@ -29,52 +29,42 @@ import graft.{Bench, GraftSession, SparkEntry}
 object Probe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.tools.Probe <query>...")
-    val unknown = args.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"no such queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to a generated sf directory"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    for ((fixture, secs) <- Bench.warmSession(spark, sfDir))
-      println(f"[probe] fixture $fixture build=$secs%.3f")
-    val jobs = new AtomicLong(0)
-    val stages = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+    QueryLoop(args.toSeq, sfDir) { loop =>
+      for ((fixture, secs) <- loop.fixtures)
+        println(f"[probe] fixture $fixture build=$secs%.3f")
+      val sc = loop.spark.sparkContext
+      val jobs = new AtomicLong(0)
+      val stages = new AtomicLong(0)
+      sc.addSparkListener(new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+          stages.incrementAndGet(); ()
+        }
+      })
+      def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for ((name, frame) <- loop.queries; run <- Seq("cold", "warm")) {
+        // listener events drain asynchronously — settle before zeroing
+        ListenerShim.waitUntilEmpty(sc)
+        jobs.set(0); stages.set(0)
+        val c0 = compiles()
+        val outcome = loop.run {
+          val (df, build) = QueryLoop.timed(frame())
+          val (_, plan) = QueryLoop.timed(df.queryExecution.executedPlan)
+          val (_, exec) = QueryLoop.timed(df.count())
+          (build, plan, exec)
+        }
+        ListenerShim.waitUntilEmpty(sc)
+        outcome.result match {
+          case Right((build, plan, exec)) =>
+            println(f"[probe] $name $run build=$build%.3f plan=$plan%.3f exec=$exec%.3f " +
+              s"jobs=${jobs.get()} stages=${stages.get()} compiles=${compiles() - c0}")
+          case Left(e) => println(s"[probe] $name $run failed: $e")
+        }
       }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-    })
-    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def secs(from: Long, to: Long): Double = (to - from) / 1e9
-    for (name <- args; run <- Seq("cold", "warm")) {
-      val fn = SparkEntry.queries(name)
-      // listener events drain asynchronously — settle before zeroing
-      ListenerShim.waitUntilEmpty(spark.sparkContext)
-      jobs.set(0); stages.set(0)
-      val c0 = compiles()
-      try {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val tPlan = System.nanoTime()
-        df.queryExecution.executedPlan
-        val tExec = System.nanoTime()
-        df.count()
-        val t1 = System.nanoTime()
-        ListenerShim.waitUntilEmpty(spark.sparkContext)
-        println(f"[probe] $name $run build=${secs(t0, tPlan)}%.3f " +
-          f"plan=${secs(tPlan, tExec)}%.3f exec=${secs(tExec, t1)}%.3f " +
-          s"jobs=${jobs.get()} stages=${stages.get()} compiles=${compiles() - c0}")
-      } catch {
-        case e: Throwable => println(s"[probe] $name $run failed: $e")
-      }
-      // same per-query hygiene as Bench: queries are independent
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      System.gc()
     }
-    spark.stop()
   }
 }
