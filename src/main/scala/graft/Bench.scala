@@ -42,17 +42,12 @@ object Bench {
       // worst case (uniform 3× contention flagging ~everything) costs one
       // extra suite pass — bounded and, on a contended run, precisely the
       // evidence needed.
-      val frames = loop.queries.toMap
-      val outcomes = results.toMap
-      val soloWarm: Seq[(String, Double)] =
-        results.collect {
-          case (name, o) if o.result.isRight && o.seconds >= 0.5 &&
-              refTimes.get(name).exists(r => o.seconds > 1.3 * r) => name
-        }.map { name =>
-          val inSuite = outcomes(name).seconds
+      val soloWarm: Seq[(String, Double)] = loop.queries.zip(results).collect {
+        case ((name, frame), (_, o)) if o.result.isRight && o.seconds >= 0.5 &&
+            refTimes.get(name).exists(r => o.seconds > 1.3 * r) =>
           def soloOnce(): Double = {
-            loop.run(frames(name)().count())
-            loop.run(frames(name)().count()).seconds
+            loop.run(frame().count())
+            loop.run(frame().count()).seconds
           }
           val first = soloOnce()
           // an adjudication entry only builds trust if it is itself
@@ -61,11 +56,11 @@ object Bench {
           // measured in a contended window (r17 committed bm25_prf_topk
           // at 2× its own clean time) — re-measure once and keep the min
           val dt =
-            if (refTimes.get(name).exists(r => first > 1.5 * r) || first > inSuite)
+            if (refTimes.get(name).exists(r => first > 1.5 * r) || first > o.seconds)
               math.min(first, soloOnce())
             else first
           (name, dt)
-        }
+      }
       // 3-decimal seconds keep the whole line inside log-tail capture
       // windows (sub-ms per-query precision is noise anyway)
       def secs(m: Seq[(String, Double)]): String =

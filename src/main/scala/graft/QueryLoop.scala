@@ -91,8 +91,15 @@ object QueryLoop {
     // stored fixtures build here, untimed: at scale they are
     // offline-persisted indexes, and timing the one-off build inside
     // whichever consumer runs first would mis-attribute it (~3.4 s of
-    // nnDescent to a SEARCH row)
-    val fixtures = graft.queries.Fixtures.ensureAll(spark, sfDir)
+    // nnDescent to a SEARCH row). A failed install must not end the
+    // run: each consumer builds a missing fixture itself and, if that
+    // throws too, reports the failure as its own outcome.
+    val fixtures =
+      try graft.queries.Fixtures.ensureAll(spark, sfDir)
+      catch { case e: Exception =>
+        System.err.println(s"[loop] fixture install failed, consumers build their own: $e")
+        Nil
+      }
     System.gc()
     fixtures
   }
